@@ -83,9 +83,10 @@ def main():
             .withColumn("jaccard", exact_jaccard_expr(F.col("sh_a"),
                                                       F.col("sh_b")))
             .select("src", "dst", "jaccard"))
-        edges = pairs.filter(F.col("jaccard") >= cfg.threshold) \
-            .select("src", "dst").localCheckpoint(eager=True)
-        _, ph["pairs_edges_ckpt"] = timed("nd: pairs+edges", lambda: edges)
+        edges, ph["pairs_edges_ckpt"] = timed(
+            "nd: pairs+edges",
+            lambda: pairs.filter(F.col("jaccard") >= cfg.threshold)
+            .select("src", "dst").localCheckpoint(eager=True))
         n_edges, _ = timed("nd: count edges", edges.count)
         asg, ph["cc"] = timed("nd: cc", lambda: connected_components(
             edges, vertices=sigs.select("doc_id")))

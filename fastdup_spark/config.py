@@ -59,7 +59,6 @@ class PipelineConfig:
     # --- execution ---
     num_partitions: int | None = None  # None -> leave to AQE / input splits
     resume: bool = True                # skip stages with completed markers
-    checkpoint_every_cc_iters: int = 3 # lineage cut cadence in the CC loop
     # hash-bucket count for the doc-keyed stage tables (extracted /
     # signatures and the derived knn / best_nn / assignments /
     # component_info / outliers): incremental updates read and rewrite only

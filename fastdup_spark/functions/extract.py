@@ -267,19 +267,20 @@ def extract_text_udf(min_text_chars: int = 1,
     return _extract
 
 
-def split_extracted(pages_df, min_text_chars: int = 1):
-    """Run extraction; return (ok_df, quarantine_df).
+def extract_pages(pages_df, min_text_chars: int = 1):
+    """ONE extraction pass over raw pages (url, warc_ts, lang, html) ->
+    (doc_id, url, warc_ts, lang, text, error_code, is_valid).
 
-    ok_df: url, warc_ts, lang, text (extracted)
-    quarantine_df: url, warc_ts, error_code   (≈ atrain_features.bad.csv)
+    doc_id = xxhash64(url): a deterministic, order-independent identity
+    (the reference numbers files in listing order, RUN.md:106-115 — ours
+    must not). Quarantined rows keep a NULL text and a non-empty
+    error_code (≈ atrain_features.bad.csv); valid rows have error_code ''.
     """
     udf = extract_text_udf(min_text_chars)
-    passthrough = [c for c in pages_df.columns if c not in ("html", "text")]
-    ext = pages_df.withColumn("_ex", udf(F.col("html"))).select(
-        *passthrough,
+    return pages_df.withColumn("_ex", udf(F.col("html"))).select(
+        F.xxhash64("url").alias("doc_id"),
+        "url", "warc_ts", "lang",
         F.col("_ex.extracted_text").alias("text"),
         F.col("_ex.error_code").alias("error_code"),
+        (F.col("_ex.error_code") == "").alias("is_valid"),
     )
-    ok = ext.filter(F.col("error_code") == "").drop("error_code")
-    bad = ext.filter(F.col("error_code") != "").select(*passthrough, "error_code")
-    return ok, bad

@@ -62,6 +62,9 @@ _SPACE_MARK = "Ġ"  # 'Ġ', the GPT-2 leading-space convention
 # rows — driver-sized). Above the gate the distributed loop still runs.
 _DRIVER_BPE_WORDS_MAX = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_WORDS",
                                            str(2_000_000)))
+# distributed merge loop: the words table is localCheckpointed every this
+# many merges, so the per-merge regexp_replace chain never grows deep
+_LINEAGE_CUT_MERGES = 8
 
 # segment_expr: merge tables LONGER than this switch from the chained
 # regexp_replace form (plan depth = n_merges; a 32k-merge chain is a
@@ -222,7 +225,6 @@ def _learn_bpe_driver(rows, n_merges: int, min_count: int):
 
 def learn_bpe(docs: DataFrame, n_merges: int, min_count: int = 2,
               text_col: str = "text",
-              checkpoint_every: int = 8,
               driver_words_max: int | None = None,
               ) -> tuple[list[BpeMerge], DataFrame]:
     """Learn ``n_merges`` BPE merges from the corpus.
@@ -287,7 +289,7 @@ def learn_bpe(docs: DataFrame, n_merges: int, min_count: int = 2,
             "symbols",
             F.regexp_replace("symbols", merge_pattern(left, right),
                              _quote_repl(left + right)))
-        if (rank + 1) % checkpoint_every == 0:
+        if (rank + 1) % _LINEAGE_CUT_MERGES == 0:
             words = words.localCheckpoint(eager=True)
     return merges, words.localCheckpoint(eager=True)
 

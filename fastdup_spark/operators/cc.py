@@ -14,10 +14,14 @@ trillion-edge graphs:
                  m = min(Γ≤(u) ∪ {u})
 
 Each round is two shuffles (groupBy min + join); iteration stops when the
-edge multiset is stable (checked with a cheap count+hash aggregate).
-Lineage is cut with localCheckpoint every ``checkpoint_every`` rounds
-(SURVEY §7 hard part 3); the driver loop is the idiomatic place for this —
-no Catalyst extension needed.
+edge multiset is stable (checked with a cheap count+hash aggregate). Every
+round is eagerly localCheckpointed, which cuts lineage (SURVEY §7 hard
+part 3) and lets the digest read cached blocks.
+
+Edge sets up to ``_CC_DRIVER_EDGES_MAX`` with integral ids skip the rounds:
+they are collected and resolved by ``_union_find_edges``, the one
+vectorized union-find in the package (semdedup's per-cluster kernel and
+the incremental update's label contraction call it too).
 
 Determinism: component id == min doc_id of the component (stable across
 partitionings and cluster sizes).
@@ -25,11 +29,10 @@ partitionings and cluster sizes).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # Edge sets at or below this size resolve on the driver (arrow collect +
 # vectorized union-find) instead of the iterative star rounds: each star
@@ -40,9 +43,8 @@ from pyspark.sql import functions as F
 # driver-bounded budget class as the kmeans centroid collect and the
 # incremental _DRIVER_IDS_MAX paths. The distributed algorithm is
 # unchanged above the gate (the 100-TB path; a graph with more edges than
-# the gate never touches the driver). Env-overridable for ops; 0 disables.
-_CC_DRIVER_EDGES_MAX = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES",
-                                          str(2_000_000)))
+# the gate never touches the driver).
+_CC_DRIVER_EDGES_MAX = 2_000_000
 
 
 def _bidir(edges: DataFrame) -> DataFrame:
@@ -99,7 +101,8 @@ def _union_find_edges(parent: np.ndarray, u: np.ndarray,
     """Vectorized union over index edge arrays (Shiloach-Vishkin hook +
     full pointer-jumping). np.minimum.at resolves conflicting hooks
     monotonically, so the fixpoint — min index per component — does not
-    depend on edge order. O(log n) passes over the arrays."""
+    depend on edge order. O(log n) passes over the arrays. The returned
+    parents are fully pointer-jumped: parent[i] is i's root."""
     while True:
         while True:
             p2 = parent[parent]
@@ -115,26 +118,33 @@ def _union_find_edges(parent: np.ndarray, u: np.ndarray,
         np.minimum.at(parent, hi[diff], lo[diff])
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect the (already distinct,
-    checkpointed) edge set via Arrow, union-find in numpy, return the
-    same (doc_id, component_id = min member id) table the star rounds
-    converge to."""
-    pdf = edges.toPandas()
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
+def _min_roots(src: np.ndarray, dst: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Every vertex of an int64 edge list (sorted) and the min vertex of
+    its component."""
     uids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     parent = _union_find_edges(
         np.arange(uids.size, dtype=np.int64),
         inv[:src.size], inv[src.size:])
     # uids is sorted, so the min component INDEX is the min member ID
+    return uids, uids[parent]
+
+
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """Small-graph fast path: collect the (already distinct,
+    checkpointed, integer-id) edge set via Arrow, union-find in numpy,
+    return the same (doc_id, component_id = min member id) table the
+    star rounds converge to."""
+    pdf = edges.toPandas()
+    uids, roots = _min_roots(pdf["src"].to_numpy(dtype=np.int64),
+                             pdf["dst"].to_numpy(dtype=np.int64))
     import pandas as pd
-    out = pd.DataFrame({"doc_id": uids, "component_id": uids[parent]})
+    out = pd.DataFrame({"doc_id": uids, "component_id": roots})
     return edges.sparkSession.createDataFrame(out)
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
-                         max_iter: int = 50, checkpoint_every: int = 3,
+                         max_iter: int = 50,
                          driver_edges_max: int | None = None) -> DataFrame:
     """edges(src,dst) -> assignments(doc_id, component_id).
 
@@ -144,7 +154,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     (fastdup_controller.py:440).
 
     ``driver_edges_max`` gates the small-graph driver fast path (default
-    ``_CC_DRIVER_EDGES_MAX``; 0 forces the distributed star rounds).
+    ``_CC_DRIVER_EDGES_MAX``; 0 forces the distributed star rounds). Ids
+    that are not integers always take the star rounds.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst").filter("src != dst").distinct()
@@ -157,14 +168,14 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
 
     # Eagerly checkpoint every round: truncates lineage AND materializes the
     # edge set once, so the digest (and the next round) read cached blocks
-    # instead of recomputing the whole iterative plan. checkpoint_every is
-    # kept for API compatibility but 1 is strictly better here because the
-    # digest already forces a full evaluation each round.
-    del checkpoint_every
+    # instead of recomputing the whole iterative plan.
     e = e.localCheckpoint(eager=True)
     gate = _CC_DRIVER_EDGES_MAX if driver_edges_max is None \
         else driver_edges_max
-    if gate and e.count() <= gate:
+    # the driver path's contract: integer ids (np.int64 arrays)
+    integral = all(isinstance(e.schema[c].dataType, IntegralType)
+                   for c in ("src", "dst"))
+    if gate and integral and e.count() <= gate:
         # one cheap count over checkpointed blocks buys skipping the whole
         # round loop (each round: ~5 shuffles + checkpoint + digest job)
         comp = _driver_components(e)

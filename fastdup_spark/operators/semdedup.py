@@ -24,8 +24,8 @@ Spark shape (the 100-TB view):
   constant-sized. A pathologically skewed cluster is the same hazard as an
   LSH mega-bucket: raise ``k`` (or pre-split the cluster key with a salt);
   this operator does not silently sample;
-* duplicate groups: large-star/small-star connected components
-  (operators/cc.py), O(log n) driver rounds;
+* duplicate groups: connected components per cluster in one Arrow pass
+  (blocked cosine matmul + operators/cc.py's vectorized union-find);
 * keep-one: a single window over ``component_id`` — rank by distance to
   the cluster centroid DESC (rounded to 4dp), ties to the smallest id.
 
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fastdup_spark.functions.similarity import cosine_expr
+from fastdup_spark.operators.cc import _union_find_edges
 from fastdup_spark.operators.kmeans import kmeans_fit
 
 # composite pair-join key for split clusters: cluster * _SUB_BASE + sub.
@@ -126,25 +127,11 @@ def semdedup_edges(assigned: DataFrame, threshold: float,
     )
 
 
-def _union_edges(parent: np.ndarray, u: np.ndarray,
-                 v: np.ndarray) -> np.ndarray:
-    """Vectorized union of edge arrays (Shiloach-Vishkin hook + full
-    pointer-jump): np.minimum.at resolves conflicting hooks monotonically,
-    so the fixpoint (min index per component) is edge-order independent.
-    O(log n) outer rounds over the edge arrays."""
-    while True:
-        while True:  # full path compression
-            p2 = parent[parent]
-            if np.array_equal(p2, parent):
-                break
-            parent = p2
-        ru, rv = parent[u], parent[v]
-        hi = np.maximum(ru, rv)
-        lo = np.minimum(ru, rv)
-        diff = hi != lo
-        if not diff.any():
-            return parent
-        np.minimum.at(parent, hi[diff], lo[diff])
+def _ceil_3dp(t: float) -> float:
+    """``t`` rounded up to the 0.001 grid (0.8725 -> 0.873, 0.95 -> 0.95)."""
+    from decimal import ROUND_CEILING, Decimal
+    return float(Decimal(repr(t)).quantize(Decimal("0.001"),
+                                           rounding=ROUND_CEILING))
 
 
 def _cluster_components_udf(id_col: str, vec_col: str, threshold: float):
@@ -158,9 +145,11 @@ def _cluster_components_udf(id_col: str, vec_col: str, threshold: float):
     anything closer replays the exact sequential fold + Spark round
     (_seq_round3)."""
     t = float(threshold)
-    # round3(c) >= t  <=>  c >= t - 5e-4 (up to rounding-tie hair; the
-    # margin band around the boundary goes through the exact replay)
-    boundary = t - 5e-4
+    # round3(c) lies on the 0.001 grid, so round3(c) >= t <=> round3(c) >=
+    # t rounded UP to that grid <=> c >= ceil3(t) - 5e-4 (up to
+    # rounding-tie hair; the margin band around the boundary goes through
+    # the exact replay). Off-grid thresholds (0.8725) need the ceiling.
+    boundary = _ceil_3dp(t) - 5e-4
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy()
@@ -200,7 +189,7 @@ def _cluster_components_udf(id_col: str, vec_col: str, threshold: float):
                 sure = tri & (S > boundary + _COS_MARGIN)
                 u, v = np.nonzero(sure)
                 if u.size:
-                    parent = _union_edges(parent, act[u + s], act[v])
+                    parent = _union_find_edges(parent, act[u + s], act[v])
                 maybe = tri & (np.abs(S - boundary) <= _COS_MARGIN)
                 mu, mv = np.nonzero(maybe)
                 if mu.size:
@@ -213,7 +202,7 @@ def _cluster_components_udf(id_col: str, vec_col: str, threshold: float):
                             eu.append(i)
                             ev.append(j)
                     if eu:
-                        parent = _union_edges(
+                        parent = _union_find_edges(
                             parent, np.asarray(eu, dtype=np.int64),
                             np.asarray(ev, dtype=np.int64))
         # zero-norm members: cosine 0.0 with every other row (any length,
@@ -221,13 +210,9 @@ def _cluster_components_udf(id_col: str, vec_col: str, threshold: float):
         if zero_norm.any() and 0.0 >= t:
             anchor = np.full(n, int(np.nonzero(zero_norm)[0][0]),
                              dtype=np.int64)
-            parent = _union_edges(parent, anchor,
-                                  np.arange(n, dtype=np.int64))
-        while True:
-            p2 = parent[parent]
-            if np.array_equal(p2, parent):
-                break
-            parent = p2
+            parent = _union_find_edges(parent, anchor,
+                                       np.arange(n, dtype=np.int64))
+        # _union_find_edges returns fully pointer-jumped parents
         return pd.DataFrame({id_col: ids, "component_id": ids[parent]})
 
     return _fn

@@ -24,11 +24,10 @@ from pyspark.sql import functions as F
 from fastdup_spark.config import PipelineConfig
 from fastdup_spark.functions.lcs import lcs_confirm
 from fastdup_spark.functions.signatures import with_signatures
-from fastdup_spark.functions.similarity import (
-    exact_jaccard_expr, hamming_expr, sig_jaccard_expr,
-)
+from fastdup_spark.functions.similarity import exact_jaccard_expr, score_pairs
 from fastdup_spark.operators.cc import connected_components
 from fastdup_spark.operators.dedup import duplicates_to_drop
+from fastdup_spark.operators.knn import knn_truncate
 from fastdup_spark.operators.lsh import (
     band_buckets, bucket_stats, candidate_pairs, salt_buckets,
 )
@@ -82,6 +81,81 @@ def near_dup_pipeline(docs: DataFrame, cfg: PipelineConfig | None = None,
                                vertices=sigs.select("doc_id"))
     return {"sigs": sigs, "candidates": cands, "pairs": pairs,
             "edges": edges, "assignments": asg}
+
+
+def _record_outlier_cutoff(fd, extra: dict | None = None,
+                           out_frame: DataFrame | None = None) -> None:
+    """Stamp the realized outlier cutoff (max best_sim in the written
+    table) into the outliers marker — the next update batch prunes its
+    best_nn scan at this value instead of re-running the percentile job.
+    ``extra`` counters (e.g. which rank path the cut took) ride along for
+    observability/tests. ``out_frame``: the already-materialized new
+    outlier set — its content equals the post-write table by construction
+    (untouched shards hold identical rows), so aggregating it skips the
+    write->read barrier on the scoped update path."""
+    src = out_frame if out_frame is not None \
+        else fd.store.read(fd.spark, "outliers")
+    c = src.agg(F.max("best_sim")).first()[0]
+    m = fd.store.read_marker("outliers") or {}
+    fd.store.refresh_marker(
+        "outliers", fd._chash,
+        counters={**m.get("counters", {}), **(extra or {}),
+                  "cutoff": None if c is None else float(c)})
+
+
+def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
+                          sim: DataFrame, done=lambda stage: False):
+    """Full rebuild of the doc-keyed derived tables from the verified pair
+    table, as three independent thunks — knn | best_nn -> outliers |
+    assignments -> component_info — for the caller to run: run() submits
+    them to its stage pool, update()'s heal path runs them in turn.
+
+    ``docs`` (doc_id, ...) gives every doc a best_nn row and a singleton
+    component; ``scored`` is pairs_scored; ``sim`` its >= threshold edges.
+    ``done(stage)`` skips stages already complete under resume. Every
+    table is hash-sharded by pmod(id, fd.n_shards), the layout the scoped
+    update path rewrites shard by shard."""
+    cfg, store, chash = fd.config, fd.store, fd._chash
+
+    def knn():
+        # top nearest_neighbors_k=2 neighbors PER DOC, directed
+        # (reference fastdup/__init__.py:486,574 — W2): bounds the
+        # table to <= k rows/doc even when a giant dup clique makes the
+        # full edge set quadratic in clique size
+        if not done("knn"):
+            store.write_sharded(knn_truncate(sim, cfg.knn_k), "knn", chash,
+                                fd.n_shards, counters={"k": cfg.knn_k})
+
+    def best_nn_outliers():
+        # (ref: bottom 5% NN distance) best_nn persists as its own stage so
+        # updates re-derive it only for docs touched by new edges
+        if not done("best_nn"):
+            bn = best_neighbor(docs, scored, sim_col="jaccard")
+            # shard files sorted by best_sim: the outlier cut's pushed
+            # range predicate skips row groups on update batches
+            store.write_sharded(bn, "best_nn", chash, fd.n_shards,
+                                sort_within=["best_sim"])
+        if not done("outliers"):
+            n_docs = (store.read_json("extract_counts") or {}).get("valid")
+            out = outliers_by_percentile(store.read(fd.spark, "best_nn"),
+                                         cfg.outlier_pct, n=n_docs)
+            store.write_sharded(out, "outliers", chash, fd.n_shards)
+            _record_outlier_cutoff(fd)
+
+    def components():
+        # (ref: CC at ccthreshold)
+        if not done("assignments"):
+            edges = scored.filter(F.col("jaccard") >= cfg.cc_threshold) \
+                          .select("src", "dst")
+            asg = connected_components(edges, vertices=docs.select("doc_id"))
+            store.write_sharded(asg, "assignments", chash, fd.n_shards)
+        if not done("component_info"):
+            info = store.read(fd.spark, "assignments").groupBy(
+                "component_id").agg(F.count("*").alias("count"))
+            store.write_sharded(info, "component_info", chash, fd.n_shards,
+                                id_col="component_id")
+
+    return knn, best_nn_outliers, components
 
 
 def search_corpus(queries: DataFrame, corpus_sigs: DataFrame,
@@ -259,20 +333,12 @@ class FastdupSpark:
         # one shuffle of the extracted text for that layout — the same price
         # an Iceberg bucket-partitioned ingest pays, once, at ingest.
         if not done("extracted"):
-            from fastdup_spark.functions.extract import extract_text_udf
+            from fastdup_spark.functions.extract import extract_pages
             from fastdup_spark.plans.store import SHARD_COL, shard_expr
             n_sh = self._resolve_layout(pages, est_rows)
-            udf = extract_text_udf(cfg.min_text_chars)
-            ext = pages.withColumn("_ex", udf(F.col("html"))).select(
-                # doc_id = xxhash64(url): deterministic, order-independent
-                # identity (ref uses listing order, RUN.md:106-115 — ours must not)
-                F.xxhash64("url").alias("doc_id"),
-                "url", "warc_ts", "lang",
-                F.col("_ex.extracted_text").alias("text"),
-                F.col("_ex.error_code").alias("error_code"),
-                (F.col("_ex.error_code") == "").alias("is_valid"),
-            ).withColumn(SHARD_COL, shard_expr("doc_id", n_sh)) \
-             .repartition(F.col(SHARD_COL))
+            ext = extract_pages(pages, cfg.min_text_chars) \
+                .withColumn(SHARD_COL, shard_expr("doc_id", n_sh)) \
+                .repartition(F.col(SHARD_COL))
             marker = self.store.write(
                 ext, "extracted", self._chash,
                 partition_by=["is_valid", SHARD_COL],
@@ -378,59 +444,26 @@ class FastdupSpark:
 
         # --- stage 5: verify (ref: cosine threshold inside edge generation) ---
         if not done("pairs_scored"):
-            # ONE join per side fetching minhash+simhash+shingles together
-            # (two joins + two sig-table scans total, was four of each):
-            # the sig_jaccard prefilter still runs BEFORE the exact-Jaccard
-            # compute, it just no longer saves shipping shingles for the
-            # rejected pairs — measured 2.1s -> 1.2s on the 100k-page
-            # bench corpus, where most candidates survive the prefilter.
-            # (At a boilerplate-heavy selectivity where rejects dominate,
-            # the trade reverses; cfg.sig_jaccard_prefilter stays the
-            # knob that bounds how much exact-verify work runs either way.)
-            wide = sigs.select("doc_id", "minhash", "simhash", "shingles")
-            scored = (
-                cands
-                .join(wide.select(F.col("doc_id").alias("src"),
-                                  F.col("minhash").alias("mh_a"),
-                                  F.col("simhash").alias("sh_a"),
-                                  F.col("shingles").alias("sg_a")), "src")
-                .join(wide.select(F.col("doc_id").alias("dst"),
-                                  F.col("minhash").alias("mh_b"),
-                                  F.col("simhash").alias("sh_b"),
-                                  F.col("shingles").alias("sg_b")), "dst")
-                .withColumn("sig_jaccard", sig_jaccard_expr(F.col("mh_a"), F.col("mh_b")))
-                .withColumn("hamming", hamming_expr(F.col("sh_a"), F.col("sh_b")))
-                # cheap prefilter: only plausible pairs pay the exact verify
-                .filter(F.col("sig_jaccard") >= cfg.sig_jaccard_prefilter)
-                .withColumn("jaccard", exact_jaccard_expr(F.col("sg_a"), F.col("sg_b")))
-                .select("src", "dst", "sig_jaccard", "hamming", "jaccard")
-            )
+            scored = score_pairs(cands, sigs, cfg.sig_jaccard_prefilter)
             self.store.write(scored, "pairs_scored", self._chash)
         scored = self.store.read(self.spark, "pairs_scored")
 
         # --- tail stages: four independent groups, submitted concurrently ---
+        # similarity table: ALL verified edges >= threshold (the >=0.99
+        # dup-pair recall contract is measured here, so no truncation).
+        # knn derives straight from this in-scope filter of pairs_scored
+        # (same rows as the similarity table by construction) — no
+        # write->read barrier on the similarity write (round-4 verdict #5).
+        sim = scored.filter(F.col("jaccard") >= cfg.threshold) \
+                    .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
+        knn, best_nn_outliers, components = derived_table_writers(
+            self, docs, scored, sim, done)
 
         def _similarity_knn():
-            # similarity table: ALL verified edges >= threshold (the >=0.99
-            # dup-pair recall contract is measured here, so no truncation)
-            sim = scored.filter(F.col("jaccard") >= cfg.threshold) \
-                        .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
             if not done("similarity"):
                 self.store.write(sim, "similarity", self._chash,
                                  counters={"threshold": cfg.threshold})
-            # knn table ≈ the reference's similarity.csv contract: top
-            # nearest_neighbors_k=2 neighbors PER DOC, directed
-            # (/root/reference/fastdup/__init__.py:486,574 — W2). Bounds the
-            # reported table to <= k rows/doc even when a giant dup clique
-            # makes the full edge set quadratic in clique size. Derived
-            # straight from the in-scope filter of pairs_scored (same rows
-            # as the similarity table by construction) — no write->read
-            # barrier on the similarity write (round-4 verdict #5).
-            if not done("knn"):
-                from fastdup_spark.operators.knn import knn_truncate
-                self.store.write_sharded(knn_truncate(sim, cfg.knn_k), "knn",
-                                         self._chash, self.n_shards,
-                                         counters={"k": cfg.knn_k})
+            knn()
 
         def _containment():
             # LCS containment confirm: sub-threshold candidates that may be
@@ -455,53 +488,8 @@ class FastdupSpark:
                         [], "src bigint, dst bigint, lcs_len bigint, containment double"),
                     "containment", self._chash)
 
-        def _components():
-            # --- stage 6: connected components (ref: CC at ccthreshold) ---
-            if not done("assignments"):
-                cc_edges = scored.filter(F.col("jaccard") >= cfg.cc_threshold) \
-                                 .select("src", "dst")
-                asg = connected_components(
-                    cc_edges, vertices=docs.select("doc_id"),
-                    checkpoint_every=cfg.checkpoint_every_cc_iters)
-                self.store.write_sharded(asg, "assignments", self._chash,
-                                         self.n_shards)
-            if not done("component_info"):
-                asg = self.store.read(self.spark, "assignments")
-                info = asg.groupBy("component_id").agg(F.count("*").alias("count"))
-                self.store.write_sharded(info, "component_info", self._chash,
-                                         self.n_shards,
-                                         id_col="component_id")
-
-        def _outliers():
-            # --- stage 7: outliers (ref: bottom 5% NN distance) ---
-            # best_nn persists as its own stage so incremental updates can
-            # re-derive it only for docs touched by new edges (anti-join)
-            # instead of windowing the full pair table per batch
-            if not done("best_nn"):
-                bn = best_neighbor(docs, scored, sim_col="jaccard")
-                # shard files sorted by best_sim: the outlier cut's pushed
-                # range predicate skips row groups on incremental batches
-                self.store.write_sharded(bn, "best_nn", self._chash,
-                                         self.n_shards,
-                                         sort_within=["best_sim"])
-            if not done("outliers"):
-                n_docs = (self.store.read_json("extract_counts") or {}).get("valid")
-                bn = self.store.read(self.spark, "best_nn")
-                out = outliers_by_percentile(bn, cfg.outlier_pct, n=n_docs)
-                self.store.write_sharded(out, "outliers", self._chash,
-                                         self.n_shards)
-                # realized cutoff -> marker: incremental batches prune at it
-                # instead of re-running the percentile scan (outliers.py)
-                c = self.store.read(self.spark, "outliers") \
-                    .agg(F.max("best_sim")).first()[0]
-                m = self.store.read_marker("outliers") or {}
-                self.store.refresh_marker(
-                    "outliers", self._chash,
-                    counters={**m.get("counters", {}),
-                              "cutoff": None if c is None else float(c)})
-
         futs = [pool.submit(f) for f in
-                (_similarity_knn, _containment, _components, _outliers)]
+                (_similarity_knn, _containment, components, best_nn_outliers)]
         futs.append(doc_stats_fut)
         for f in futs:
             f.result()

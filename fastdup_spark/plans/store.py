@@ -139,6 +139,29 @@ class StageStore:
             writer = writer.partitionBy(*partition_by)
         writer.save(path)
 
+    def append(self, df: DataFrame, stage: str,
+               partition_by: list[str] | None = None) -> None:
+        """Append rows to a stage table in its on-disk layout; the marker is
+        left for the caller to republish (refresh_marker). Sharded tables
+        (shard params in the marker) get the shard column recomputed and
+        rows coalesced per shard, so a batch adds O(touched-shards) files.
+        A zero-row table is the FLAT schema-file fallback of `write`;
+        hive-partitioned dirs must not mix with it, so a partitioned append
+        replaces it with a fresh partitioned write instead."""
+        params = self.shard_params(stage)
+        if params is not None:
+            id_col, n_shards = params
+            df = df.withColumn(SHARD_COL, shard_expr(id_col, n_shards)) \
+                   .repartition(F.col(SHARD_COL))
+            partition_by = (partition_by or []) + [SHARD_COL]
+        if partition_by and not self.footer_rows(stage):
+            self.write_table(df, stage, partition_by=partition_by)
+            return
+        w = df.write.mode("append").format(self.fmt)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.save(self.table_path(stage))
+
     def refresh_marker(self, stage: str, config_hash: str,
                        counters: dict | None = None) -> dict:
         """Rebuild a stage marker from the table's parquet footers WITHOUT
@@ -191,6 +214,15 @@ class StageStore:
                 self._lineage_memo[full] = (st.st_mtime, st.st_size, rows)
                 out.append({"file": rel, "rows": rows})
         return out
+
+    def lineage(self, stage: str) -> list[dict]:
+        """Per-file row counts of a stage table (``file`` relative to the
+        table dir, so hive partition values are readable from it)."""
+        return self._parquet_lineage(self.table_path(stage))
+
+    def footer_rows(self, stage: str) -> int:
+        """Row count of a stage table from its footers — no Spark job."""
+        return sum(x["rows"] for x in self.lineage(stage))
 
     def footer_max(self, stage: str, col: str):
         """Exact max of ``col`` across a parquet stage table from row-group

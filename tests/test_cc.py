@@ -119,3 +119,13 @@ def test_driver_fast_path_matches_distributed(spark):
             for r in connected_components(
                 e, v, driver_edges_max=0).collect()}
     assert fast == dist == _oracle(edges, vertices=range(450))
+
+
+def test_string_ids_take_star_rounds(spark):
+    # the driver fast path needs integer ids; other id types fall through
+    # to the star rounds even below the driver-edge gate
+    edges = [("b", "a"), ("c", "b"), ("x", "y"), ("m", "z"), ("z", "c")]
+    e = spark.createDataFrame(edges, "src string, dst string")
+    got = {r["doc_id"]: r["component_id"]
+           for r in connected_components(e).collect()}
+    assert got == _oracle(edges)

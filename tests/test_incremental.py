@@ -200,7 +200,8 @@ def test_finalize_crash_then_new_batch_heals(spark, tmp_path):
     for stage, cols in (("assignments", ("doc_id", "component_id")),
                         ("knn", ("doc_id", "nn", "rank")),
                         ("best_nn", ("doc_id", "best_sim", "best_nn")),
-                        ("outliers", ("doc_id", "best_sim", "best_nn"))):
+                        ("outliers", ("doc_id", "best_sim", "best_nn")),
+                        ("component_info", ("component_id", "count"))):
         ta = {tuple(r[c] for c in cols)
               for r in fd.store.read(spark, stage).collect()}
         tb = {tuple(r[c] for c in cols)
@@ -298,3 +299,45 @@ def test_five_sequential_batches_match_full_run(spark, tmp_path):
         rows = sum(x["rows"] for x in
                    fd.store._parquet_lineage(fd.store.table_path(s)))
         assert m["rows"] == rows, s
+
+
+def _merge_map_oracle(edges):
+    """Dict union-find keeping the min label as root; identity omitted."""
+    parent = {}
+
+    def find(x):
+        while parent.get(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent if find(x) != x}
+
+
+def test_label_merge_map():
+    """The update's CC contraction: min-label roots, identity entries
+    omitted, chains collapsed, and signed 64-bit (xxhash64-style) labels."""
+    import numpy as np
+
+    from fastdup_spark.streaming.incremental import _label_merge_map
+
+    neg = -6_917_529_027_641_081_856
+    # chain 12-7-9-5 joined to a negative label; a separate pair; a
+    # self-loop, which merges nothing
+    src = np.array([12, 7, 9, 5, 4, 100], dtype=np.int64)
+    dst = np.array([7, 9, 5, neg, 3, 100], dtype=np.int64)
+    assert _label_merge_map(src, dst) == {12: neg, 9: neg, 7: neg, 5: neg,
+                                          4: 3}
+    assert _label_merge_map(np.array([], dtype=np.int64),
+                            np.array([], dtype=np.int64)) == {}
+
+    rng = np.random.default_rng(5)
+    for _ in range(50):
+        labels = rng.integers(-2**63, 2**63 - 1, size=40, dtype=np.int64)
+        e = rng.choice(labels, size=(30, 2))
+        got = _label_merge_map(e[:, 0].copy(), e[:, 1].copy())
+        want = _merge_map_oracle([(int(a), int(b)) for a, b in e])
+        assert got == want

@@ -196,3 +196,21 @@ def test_cluster_components_match_edge_cc(spark):
                    vertices=df.select(F.col("vec_id").alias("doc_id"))
                ).collect()}
         assert new == old, f"threshold {thr}"
+
+
+def test_off_grid_threshold_decisions_match_edges(spark):
+    """A threshold off the 0.001 grid: the edges table keeps
+    round(cosine, 3) >= 0.8725, i.e. >= 0.873, and the decision kernel
+    must draw the same line. cos(0, 1) = 0.8723 rounds to 0.872 (no
+    edge); cos(2, 3) = 0.8734 rounds to 0.873 (edge)."""
+    import math
+
+    ab, cd = 0.8723, 0.8734
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [ab, math.sqrt(1 - ab * ab), 0.0]),
+            (2, [0.0, 0.0, 1.0]), (3, [0.0, math.sqrt(1 - cd * cd), cd])]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = semdedup(e, k=1, n_iter=1, threshold=0.8725)
+    assert {(r["src"], r["dst"]) for r in out["edges"].collect()} == {(2, 3)}
+    comp = {r["vec_id"]: r["component_id"]
+            for r in out["decisions"].collect()}
+    assert comp == {0: 0, 1: 1, 2: 2, 3: 2}

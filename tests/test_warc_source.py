@@ -33,12 +33,14 @@ def test_roundtrip(spark, corpus, tmp_path, gz):
 def test_extraction_invariant_from_warc(spark, corpus, tmp_path):
     """The per-row invariant (byte-identical extracted text per url) must
     hold when ingest starts from the archive format, not just parquet."""
-    from fastdup_spark.functions.extract import split_extracted
+    from pyspark.sql import functions as F
+
+    from fastdup_spark.functions.extract import extract_pages
 
     out = str(tmp_path / "w")
     write_warc_files(corpus, out, gzip_members=True)
     pages = read_warc_pages(spark, out)
-    ok, _bad = split_extracted(pages, 1)
+    ok = extract_pages(pages, 1).filter(F.col("is_valid"))
     got = {r["url"]: r["text"] for r in ok.collect()}
     truth = dict(zip(corpus["url"], corpus["text"]))
     checked = 0
