@@ -64,9 +64,10 @@ class PipelineConfig:
     # component_info / outliers): incremental updates read and rewrite only
     # the buckets containing touched ids (parquet dynamic partition
     # overwrite + partition-pruned scans ≈ Iceberg bucket(N, doc_id) +
-    # MERGE). None (default) auto-scales with corpus size at the first
-    # run() — see resolve_store_shards — and the resolved value persists in
-    # the work dir (store_layout.json) so later updates keep the layout.
+    # MERGE). None (default) auto-scales at the first run(): ~25k docs per
+    # shard, never fewer than one shard per core (capped at 32) — see
+    # resolve_store_shards — and the resolved value persists in the work
+    # dir (store_layout.json) so later runs and updates keep the layout.
     # Set explicitly to pin a layout (tests; fixed deployments).
     store_shards: int | None = None
 
@@ -93,14 +94,38 @@ class PipelineConfig:
 # touched doc regardless of corpus size — while the full run's file count
 # stays O(corpus/25k) (over-sharding was measured to cost 3x at sf0.1:
 # 1024 dirs x 7 tables of pyarrow footer lineage + dir listings dominated;
-# BENCH/BASELINE.md round-6 bisect). The 65536 cap bounds file counts and
-# still leaves ~1.5e7 rows/shard at 10^12 docs — a sane Iceberg bucket(N)
-# width. Pow2 quantization keeps the resolved value stable under small
-# corpus drift.
-def resolve_store_shards(n_docs: int) -> int:
-    """Auto-scale the hash-bucket count with corpus size (used when
-    PipelineConfig.store_shards is None)."""
+# BENCH/BASELINE.md round-6 bisect). Small corpora hit the floor, one
+# shard per core (pow2ceil(min(P, 32)), P = the session's
+# defaultParallelism): the signature UDF scans `extracted` with no shuffle
+# in between, so it needs one file per core to use every core, and more
+# files than that only add tiny-file cost (a fixed floor of 32 left a
+# 1.5k-doc store at ~47 docs per parquet file; trickle update 19.4 s at 32
+# shards vs 14.6 s at 4, local[4] on a 4-vCPU VM). The floor caps at 32,
+# so a 32+-core session resolves exactly as with a fixed floor of 32. The
+# 65536 cap bounds file counts and still leaves ~1.5e7 rows/shard at
+# 10^12 docs — a sane Iceberg bucket(N) width. Pow2 quantization keeps the
+# resolved value stable under small corpus drift.
+_DOCS_PER_SHARD = 25_000
+_MAX_SHARD_FLOOR = 32
+_MAX_SHARDS = 65536
+
+
+def _pow2ceil(x: float) -> int:
     import math
-    if n_docs <= 0:
-        return 32
-    return max(32, min(65536, 2 ** math.ceil(math.log2(max(1.0, n_docs / 25_000)))))
+    return 2 ** math.ceil(math.log2(max(1.0, x)))
+
+
+def resolve_store_shards(n_docs: int, parallelism: int | None = None) -> int:
+    """Auto-scale the hash-bucket count with corpus size (used when
+    PipelineConfig.store_shards is None): ``pow2ceil(n_docs / 25k)``
+    clamped to ``[pow2ceil(min(P, 32)), 65536]``. ``parallelism`` (P)
+    defaults to the active SparkContext's ``defaultParallelism`` (32 when
+    none is running). The context, not ``SparkSession.getActiveSession()``,
+    because the active session is thread-local and stage-pool threads see
+    none."""
+    if parallelism is None:
+        from pyspark import SparkContext
+        sc = SparkContext._active_spark_context
+        parallelism = sc.defaultParallelism if sc is not None else _MAX_SHARD_FLOOR
+    floor = _pow2ceil(min(parallelism, _MAX_SHARD_FLOOR))
+    return max(floor, min(_MAX_SHARDS, _pow2ceil(n_docs / _DOCS_PER_SHARD)))

@@ -24,10 +24,16 @@ from pyspark.sql import functions as F
 
 
 def exact_jaccard_expr(a: Column, b: Column) -> Column:
-    """Exact Jaccard of two DISTINCT-element arrays."""
+    """Exact Jaccard of two DISTINCT-element arrays (1.0 when both are
+    empty, NULL when either is NULL).
+
+    ``array_intersect`` appears once in an always-evaluated position (the
+    first ``coalesce`` child), so subexpression elimination computes it once
+    per pair; inside ``CaseWhen`` branches it would run three times."""
     inter = F.size(F.array_intersect(a, b))
-    union = F.size(a) + F.size(b) - inter
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+    sizes = F.size(a) + F.size(b)
+    return F.coalesce(F.try_divide(inter, sizes - inter),
+                      F.when(sizes == 0, F.lit(1.0)))
 
 
 def sig_jaccard_expr(sig_a: Column, sig_b: Column) -> Column:

@@ -263,7 +263,8 @@ class FastdupSpark:
                 else:
                     counts = self.store.read_json("extract_counts") or {}
                     self._n_shards = resolve_store_shards(
-                        counts.get("valid", 0) + counts.get("bad", 0))
+                        counts.get("valid", 0) + counts.get("bad", 0),
+                        self.spark.sparkContext.defaultParallelism)
         return self._n_shards
 
     def _resolve_layout(self, pages: DataFrame, est_rows: int | None) -> int:
@@ -281,7 +282,8 @@ class FastdupSpark:
                 n_sh = int(layout["n_shards"])
             else:
                 n_sh = resolve_store_shards(
-                    est_rows if est_rows is not None else pages.count())
+                    est_rows if est_rows is not None else pages.count(),
+                    self.spark.sparkContext.defaultParallelism)
         self.store.write_json({"n_shards": n_sh, "sharded_by": "doc_id"},
                               "store_layout")
         self._n_shards = n_sh

@@ -29,9 +29,9 @@ def main() -> None:
     ap.add_argument("--store-shards", type=int, default=None,
                     help="hash-bucket count for the stage tables. Default "
                          "auto-scales with corpus size (~25k docs/shard, "
-                         "pow2, capped 65536 — config.resolve_store_shards) "
-                         "and persists in store_layout.json; override to "
-                         "pin a layout")
+                         "pow2, at least one per core up to 32, capped "
+                         "65536 — config.resolve_store_shards) and persists "
+                         "in store_layout.json; override to pin a layout")
     ap.add_argument("--pre-dedup", default=None,
                     help="comma list of cheap cascade tiers to run BEFORE "
                          "the near-dup pipeline: 'url', 'exact' or "

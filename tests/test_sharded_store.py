@@ -11,7 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from fastdup_spark import FastdupSpark
+from fastdup_spark import FastdupSpark, PipelineConfig
+from fastdup_spark.config import resolve_store_shards
 from fastdup_spark.fixtures.pages import generate_pages, pages_to_spark
 from fastdup_spark.plans.store import SHARD_COL
 
@@ -31,12 +32,14 @@ def _files_by_shard(store, stage) -> dict[str, frozenset]:
 @pytest.fixture(scope="module")
 def tiny_batch_run(spark, tmp_path_factory):
     """600-page base run + a 3-page second batch (near-dups of existing
-    docs, so components merge and knn/best_nn actually change)."""
+    docs, so components merge and knn/best_nn actually change). The layout
+    is pinned at 32 shards: scoped rewrites need more shards than touched
+    docs, and a 600-page corpus auto-resolves to one shard per core."""
     base = tmp_path_factory.mktemp("shards")
     data = generate_pages(600, seed=11)
     pages, truth_pairs, _ = pages_to_spark(spark, data)
     pages = pages.cache()
-    fd = FastdupSpark(spark, str(base / "inc"))
+    fd = FastdupSpark(spark, str(base / "inc"), PipelineConfig(store_shards=32))
     fd.run(pages)
 
     before = {s: _files_by_shard(fd.store, s) for s in SHARDED_STAGES}
@@ -104,6 +107,63 @@ def test_tiny_batch_result_equals_full_run(spark, tiny_batch_run, tmp_path):
         tb = {tuple(r[c] for c in cols)
               for r in fd_full.store.read(spark, stage).collect()}
         assert ta == tb, f"scoped {stage} diverged from full run"
+
+
+def test_resolve_store_shards():
+    """~25k docs per shard, pow2, floored at one shard per core (the floor
+    itself capped at 32) and capped at 65536."""
+    assert [resolve_store_shards(1500, p) for p in (4, 8, 64)] == [4, 8, 32]
+    assert resolve_store_shards(1500, 3) == 4  # floor is pow2 too
+    assert resolve_store_shards(1_000_000, 4) == 64
+    assert resolve_store_shards(800_000, 64) == 32
+    assert resolve_store_shards(10 ** 12, 4) == 65536
+    for n in (0, -5):
+        assert [resolve_store_shards(n, p) for p in (4, 8, 64)] == [4, 8, 32]
+
+
+def test_resolve_store_shards_defaults_to_session_parallelism(spark, fd):
+    """One-argument calls read P from the running context, and a fresh
+    small store persists the one-shard-per-core layout."""
+    p = spark.sparkContext.defaultParallelism
+    assert resolve_store_shards(1500) == resolve_store_shards(1500, p)
+    layout = fd.store.read_json("store_layout")
+    assert layout["n_shards"] == fd.n_shards == \
+        resolve_store_shards(fd.docs().count(), p)
+    assert fd.store.shard_params("knn") == ("doc_id", fd.n_shards)
+
+
+def test_persisted_layout_survives_run_and_update(spark, tmp_path, caplog):
+    """A work dir whose store_layout.json says 32 shards (what a fixed
+    floor of 32 persisted for any small store) keeps 32 through run() and
+    update() with the default config, and the update stays on the scoped
+    path."""
+    data = generate_pages(300, seed=29)
+    pages, _, _ = pages_to_spark(spark, data)
+    pages = pages.cache()
+    cutoff = pages.selectExpr(
+        "percentile(cast(warc_ts as double), 0.8) p").first()["p"]
+    old = pages.filter(F.col("warc_ts").cast("double") <= cutoff)
+    new = pages.filter(F.col("warc_ts").cast("double") > cutoff)
+
+    work = str(tmp_path / "legacy")
+    fd = FastdupSpark(spark, work)
+    fd.store.write_json({"n_shards": 32, "sharded_by": "doc_id"},
+                        "store_layout")
+    fd.run(old)
+    assert fd.n_shards == 32
+    assert resolve_store_shards(300) < 32  # auto would have picked fewer
+
+    fd2 = FastdupSpark(spark, work)  # a later session on the same dir
+    fd2.run(old)
+    assert fd2.n_shards == 32
+    with caplog.at_level("INFO", logger="fastdup_spark"):
+        stats = fd2.update(new)
+    assert stats["new_docs"] > 0 and stats["path"] == "clean"
+    assert 0 < stats["touched_docs"] < fd2.docs().count()  # scoped, not full
+    assert "full-rebuild" not in caplog.text
+    assert fd2.store.read_json("store_layout")["n_shards"] == 32
+    for s in ("extracted", "signatures", *SHARDED_STAGES):
+        assert fd2.store.shard_params(s)[1] == 32, s
 
 
 def test_read_strips_shard_column(tiny_batch_run, spark):

@@ -25,6 +25,32 @@ def test_exact_jaccard_matches_python(spark):
         assert g == pytest.approx(expect)
 
 
+def _case_when_jaccard(a, b):
+    """The CaseWhen form exact_jaccard_expr replaced (intersection three
+    times per pair); kept as the reference for edge-case parity."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+
+
+def test_exact_jaccard_null_and_empty_match_case_when(spark):
+    """NULL arrays give NULL, two empty arrays give 1.0, one empty array
+    gives 0.0 — exactly (==) what the CaseWhen form gives, same type."""
+    cases = [
+        (None, [1, 2]), ([1, 2], None), (None, None), (None, []), ([], None),
+        ([], []), ([], [7]), ([7], []),
+        ([1, 2, 3], [2, 3, 4]), ([5], [5]), ([1, 2], [3, 4]),
+    ]
+    df = spark.createDataFrame(cases, "a array<long>, b array<long>")
+    out = df.select(exact_jaccard_expr(F.col("a"), F.col("b")).alias("new"),
+                    _case_when_jaccard(F.col("a"), F.col("b")).alias("old"))
+    assert out.schema["new"].dataType == out.schema["old"].dataType
+    assert out.schema["new"].nullable
+    rows = out.collect()
+    assert [r["new"] for r in rows] == [r["old"] for r in rows]
+    assert [r["new"] for r in rows[:8]] == [None] * 5 + [1.0, 0.0, 0.0]
+
+
 def test_sig_jaccard_positional(spark):
     df = spark.createDataFrame([([1, 2, 3, 4], [1, 9, 3, 9])], "a array<long>, b array<long>")
     assert df.select(sig_jaccard_expr(F.col("a"), F.col("b")).alias("j")).first()["j"] == pytest.approx(0.5)
