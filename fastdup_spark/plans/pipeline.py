@@ -107,8 +107,9 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
                           sim: DataFrame, done=lambda stage: False):
     """Full rebuild of the doc-keyed derived tables from the verified pair
     table, as three independent thunks — knn | best_nn -> outliers |
-    assignments -> component_info — for the caller to run: run() submits
-    them to its stage pool, update()'s heal path runs them in turn.
+    assignments -> component_info — for the caller to run concurrently:
+    run() submits them to its stage pool, update()'s rebuild finalize to
+    its own thread pool.
 
     ``docs`` (doc_id, ...) gives every doc a best_nn row and a singleton
     component; ``scored`` is pairs_scored; ``sim`` its >= threshold edges.

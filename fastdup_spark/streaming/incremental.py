@@ -10,25 +10,34 @@ new WARC pages, keyed by a `warc_ts` high-water mark:
     index (so new docs pair with both old and new docs) — the same plan a
     Structured Streaming foreachBatch sink would run;
   * verify on the new pairs only (append to pairs_scored/similarity);
-  * knn / best_nn re-derived ONLY for docs incident to the batch's new
-    edges (plus the new docs) — unaffected rows carry over via anti-join;
-  * connected components resolved by CONTRACTION: batches only ever ADD
-    edges, so merging is monotone — map the new edges' endpoints to their
-    existing component labels, resolve the tiny component-level graph with
-    operators/cc.py's vectorized union-find on the driver (broadcast-sized
-    by construction; above cc's driver-edge gate the distributed
-    large-star/small-star job guards giant backfills), and relabel the
-    assignments table through the merge map. Component labels are
-    min-doc_ids and the union-find keeps the min as root, so merged labels
-    come out exactly as a from-scratch run would produce. The crash-heal
-    path still re-resolves globally from pairs_scored.
+  * the derived tables (knn, best_nn, outliers, assignments,
+    component_info) are finalized by one of two branches, gated on the
+    input: when the batch's affected docs (endpoints of its new edges plus
+    the new docs) leave some store shard untouched, the SCOPED branch
+    re-derives rows ONLY for those docs and rewrites only their shards —
+    unaffected rows carry over via anti-join; when the affected set spans
+    every shard (the usual trickle at one shard per core) nothing could be
+    skipped, so run()'s own derived-table writers REBUILD the tables over
+    the whole pair table in fewer, larger Spark jobs;
+  * on the scoped branch, connected components resolve by CONTRACTION:
+    batches only ever ADD edges, so merging is monotone — map the new
+    edges' endpoints to their existing component labels, resolve the tiny
+    component-level graph with operators/cc.py's vectorized union-find on
+    the driver (broadcast-sized by construction; above cc's driver-edge
+    gate the distributed large-star/small-star job guards giant
+    backfills), and relabel the assignments table through the merge map.
+    Component labels are min-doc_ids and the union-find keeps the min as
+    root, so merged labels come out exactly as a from-scratch run would
+    produce. The rebuild branch (and the crash heal) re-resolves globally
+    from pairs_scored.
 
 Every step update() shares with run() has ONE implementation, and this
 module only scopes it to the batch: extraction (functions/extract.py
 extract_pages), the verify join (functions/similarity.py score_pairs),
 the union-find (operators/cc.py), appends in the store's layout
-(StageStore.append) and the full derived-table rebuild of the heal path
-(plans/pipeline.py derived_table_writers, run()'s own tail).
+(StageStore.append) and the full derived-table rebuild of the rebuild
+and heal paths (plans/pipeline.py derived_table_writers, run()'s own
+tail).
 
 O(batch) scaling (round-5 verdict #2/#3): the doc-keyed base tables
 (`extracted`, `signatures`) share the derived tables' bucket(N, doc_id)
@@ -47,10 +56,10 @@ layout, so every per-batch corpus touch prunes at the file index:
   * the LCS text fetch reads only the shards holding the candidate pairs'
     endpoints instead of the full text column.
 N auto-scales with corpus size (config.resolve_store_shards) and persists
-in store_layout.json, so a trickle batch touches O(batch) shards end to
-end. Independent stage appends and the derived-table updates run from
-concurrent driver threads (same pattern as run()), collapsing the fixed
-per-job overhead that dominates small batches.
+in store_layout.json, so a batch small against N touches O(batch) shards
+end to end. Independent stage appends and the derived-table writers run
+from concurrent driver threads (same pattern as run()), collapsing the
+fixed per-job overhead that dominates small batches.
 
 Fixed-job-count budget (round-6 verdict #3): for batches under
 _DRIVER_IDS_MAX the batch's (doc_id, is_valid) rows are collected to the
@@ -101,8 +110,10 @@ Crash-safety model (exactly-once per batch):
     the extracted marker stale; every update start compares the marker's
     row count against the parquet footers and, when stale, forces the
     full (affected=None) rebuild in its own finalize — even when the next
-    batch carries genuinely new docs and would otherwise take the scoped
-    path (round-3 ADVICE, low).
+    batch carries genuinely new docs and its affected set would otherwise
+    pass the scoped gate (round-3 ADVICE, low). That heal reports the whole
+    corpus as touched; the gated rebuild (affected set spans every shard)
+    reports the affected-set size.
   * after the appends, stage markers are regenerated from the parquet
     footers (rows + per-file lineage stay truthful; footer reads are
     memoized per immutable file in plans/store.py) and run_manifest is
@@ -387,16 +398,16 @@ def incremental_update(fd, new_pages: DataFrame,
         # fully-redelivered batch. If a prior run crashed AFTER the extracted
         # append but BEFORE the bookkeeping tail, the extracted marker is
         # stale (tripwire #1 above) — heal with a full rebuild.
-        touched = 0
+        touched, finalize = 0, None
         if marker_stale:
             _LOG.info("incremental: stale extracted marker on a fully-"
                       "redelivered batch — healing with a full rebuild")
-            touched = _finalize_bookkeeping(fd, n_appended_pairs=0,
-                                            mem_bloom=mem_bloom,
-                                            committed_ids_local=committed_ids)
+            touched, finalize = _finalize_bookkeeping(
+                fd, n_appended_pairs=0, mem_bloom=mem_bloom,
+                committed_ids_local=committed_ids)
         return {"new_docs": 0, "new_pairs": 0, "touched_docs": touched,
                 "path": "heal_rebuild" if marker_stale else "noop",
-                "hwm": str(hwm)}
+                "finalize": finalize, "hwm": str(hwm)}
     if new_ids_local is not None:
         # literal frame: every downstream broadcast/semi sees a known-tiny
         # relation and no job ever re-derives the id set
@@ -697,16 +708,12 @@ def incremental_update(fd, new_pages: DataFrame,
             new_cc_edges = rel_active.filter(
                 F.col("jaccard") >= cfg.cc_threshold).select("src", "dst")
         new_ids_arg = new_ids
-    touched = _finalize_bookkeeping(fd, n_appended_pairs=int(n_pairs),
-                                    affected=affected,
-                                    new_cc_edges=new_cc_edges,
-                                    new_ids=new_ids_arg,
-                                    n_edges_hint=int(n_rel),
-                                    affected_local=affected_local,
-                                    new_ids_local=new_ids_local,
-                                    mem_bloom=mem_bloom,
-                                    committed_ids_local=committed_ids,
-                                    _timings=_timings, _t0=_t0)
+    touched, finalize = _finalize_bookkeeping(
+        fd, n_appended_pairs=int(n_pairs), affected=affected,
+        new_cc_edges=new_cc_edges, new_ids=new_ids_arg,
+        n_edges_hint=int(n_rel), affected_local=affected_local,
+        new_ids_local=new_ids_local, mem_bloom=mem_bloom,
+        committed_ids_local=committed_ids, _timings=_timings, _t0=_t0)
     _mark("finalize")
 
     hwm_out = _footer_hwm(fd)
@@ -715,12 +722,13 @@ def incremental_update(fd, new_pages: DataFrame,
     # which ingest path ran — observability for operators and tests:
     # "clean" = zero idempotency anti-joins (footer tripwire), "replay" =
     # batch-scoped repair of a crashed history, "full_rebuild" = stale
-    # marker forced the derived tables to rebuild from scratch
+    # marker forced the derived tables to rebuild from scratch; `finalize`
+    # says which derived-table branch ran ("scoped" | "rebuild")
     path = ("full_rebuild" if marker_stale
             else "clean" if clean_history else "replay")
     return {"new_docs": int(n_new), "new_pairs": int(n_pairs),
-            "touched_docs": touched, "path": path, "hwm": str(hwm_out),
-            "phase_completed_s": _timings}
+            "touched_docs": touched, "path": path, "finalize": finalize,
+            "hwm": str(hwm_out), "phase_completed_s": _timings}
 
 
 def _semi(df: DataFrame, ids: DataFrame, col: str) -> DataFrame:
@@ -779,6 +787,16 @@ def _label_merge_map(src: np.ndarray, dst: np.ndarray) -> dict[int, int]:
     return dict(zip(labels[moved].tolist(), roots[moved].tolist()))
 
 
+def _scoped_can_skip(aff_shards: list[int], n_shards: int) -> bool:
+    """The finalize gate. The scoped read-merge-overwrite can only beat
+    run()'s writers by leaving shards untouched: once the affected set
+    spans every shard it skips none and still runs many more small Spark
+    jobs than the full rebuild over the whole pair table. A function of its
+    own so tests can hold it open and cover the scoped branch on small
+    stores."""
+    return len(aff_shards) < n_shards
+
+
 def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                           affected: DataFrame | None = None,
                           new_cc_edges: DataFrame | None = None,
@@ -803,28 +821,32 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
     over. CC resolves by component-graph contraction over ``new_cc_edges``
     (exact — edge insertion is monotone); ``new_ids`` (the docs committing
     in this batch) seeds their singleton assignment rows without scanning
-    the assignments table. ``affected=None`` — the crash-heal path, or a
-    work dir whose derived tables predate the current shard layout —
-    recomputes everything with run()'s own derived-table writers
-    (plans/pipeline.py derived_table_writers) over the ghost-free pairs.
+    the assignments table. run()'s own derived-table writers
+    (plans/pipeline.py derived_table_writers) recompute everything over the
+    ghost-free pairs instead when ``affected=None`` — the crash-heal path,
+    or a work dir whose derived tables predate the current shard layout —
+    and when the affected set spans every shard, where scoping could skip
+    no shard (the gate below).
 
-    WRITES are shard-scoped (round-3 verdict item #1): the five derived
-    tables are hash-bucketed by pmod(id, n_shards) and a batch rewrites
-    ONLY the shards containing changed rows via dynamic partition
+    Scoped-branch WRITES are shard-scoped (round-3 verdict item #1): the
+    five derived tables are hash-bucketed by pmod(id, n_shards) and a batch
+    rewrites ONLY the shards containing changed rows via dynamic partition
     overwrite — the parquet-native equivalent of Iceberg MERGE INTO. The
     carried-over rows of untouched shards are never read or rewritten, so
     per-batch write volume is O(touched-shard data), not O(corpus).
     outliers/component_info contents can also SHRINK (an outlier displaced
     by the moving percentile cut; a component label merged away) — their
     scope comes from an old-vs-new diff and emptied shards are deleted.
-    The four independent table groups (knn | best_nn→outliers |
-    assignments→component_info) update from concurrent driver threads.
+    The three independent table groups (knn | best_nn→outliers |
+    assignments→component_info) update from concurrent driver threads,
+    on either branch.
 
     The `extracted` marker refreshes LAST: if a crash interrupts the
     derived-table writes, the stale marker keeps tripping the
     rows-vs-footers heal check at the start of every later update.
 
-    Returns the number of touched docs (== total docs on the full path).
+    Returns ``(touched_docs, finalize)``: the affected-set size (total
+    docs on the heal path) and which branch ran, "scoped" or "rebuild".
     """
     spark = fd.spark
     store = fd.store
@@ -891,28 +913,31 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
         affected = None  # pre-shard-layout work dir: full rebuild heals it
 
     if affected is None:
-        # the same writers run()'s tail uses, over the ghost-free pair set
-        touched = counts["valid"]
-        for write in derived_table_writers(fd, fd.docs(), scored_all,
-                                           sim_all):
-            write()
+        # crash heal / layout mismatch: no scope, the whole corpus is touched
+        touched, aff_shards = counts["valid"], None
+    elif affected_local is not None:
+        # the affected set is already a driver-side literal frame —
+        # touched count and shard list come from pure Python, skipping
+        # the pin job and the shard-histogram job
+        aff = affected
+        touched = len(affected_local)
+        aff_shards = sorted({_shard_of(i, n_sh) for i in affected_local})
     else:
-        if affected_local is not None:
-            # the affected set is already a driver-side literal frame —
-            # touched count and shard list come from pure Python, skipping
-            # the pin job and the shard-histogram job
-            aff = affected
-            touched = len(affected_local)
-            aff_shards = sorted({_shard_of(i, n_sh) for i in affected_local})
-        else:
-            aff = affected.localCheckpoint(eager=True)
-            # shard histogram of the affected set: ONE tiny job yields both
-            # the touched-doc count and the touched-shard list
-            srows = aff.groupBy(shard_expr("doc_id", n_sh).alias("s")) \
-                .agg(F.count("*").alias("c")).collect()
-            touched = int(sum(r["c"] for r in srows))
-            aff_shards = sorted(r["s"] for r in srows)
+        aff = affected.localCheckpoint(eager=True)
+        # shard histogram of the affected set: ONE tiny job yields both
+        # the touched-doc count and the touched-shard list
+        srows = aff.groupBy(shard_expr("doc_id", n_sh).alias("s")) \
+            .agg(F.count("*").alias("c")).collect()
+        touched = int(sum(r["c"] for r in srows))
+        aff_shards = sorted(r["s"] for r in srows)
+    # decided before the aff_pairs pin, which the rebuild does not need
+    scoped = aff_shards is not None and _scoped_can_skip(aff_shards, n_sh)
+    finalize = "scoped" if scoped else "rebuild"
+    _LOG.debug("incremental: %s finalize — %d touched docs in %s of %d "
+               "shards", finalize, touched,
+               "all" if aff_shards is None else len(aff_shards), n_sh)
 
+    if scoped:
         # ONE column-pruned pass over the pair table serves knn AND best_nn:
         # every pair touching an affected doc (broadcast semi, no shuffle).
         # The similarity table is by construction scored_all filtered at
@@ -959,18 +984,13 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                 store.read(spark, "best_nn"), cfg.outlier_pct,
                 n=counts["valid"],
                 cutoff_hint=hint, stats=rank_stats).localCheckpoint(eager=True)
-            if len(aff_shards) == n_sh:
-                # every shard is already being rewritten — the old-vs-new
-                # membership diff cannot widen the set; skip its job
-                out_shards = aff_shards
-            else:
-                old_out_ids = store.read(spark, "outliers").select("doc_id")
-                sym_diff = old_out_ids.join(out_new.select("doc_id"),
-                                            "doc_id", "left_anti") \
-                    .unionByName(out_new.select("doc_id")
-                                 .join(old_out_ids, "doc_id", "left_anti"))
-                out_shards = sorted(set(aff_shards)
-                                    | set(_shards_of(sym_diff, n_sh)))
+            old_out_ids = store.read(spark, "outliers").select("doc_id")
+            sym_diff = old_out_ids.join(out_new.select("doc_id"),
+                                        "doc_id", "left_anti") \
+                .unionByName(out_new.select("doc_id")
+                             .join(old_out_ids, "doc_id", "left_anti"))
+            out_shards = sorted(set(aff_shards)
+                                | set(_shards_of(sym_diff, n_sh)))
             store.overwrite_shards(
                 out_new.filter(shard_expr("doc_id", n_sh).isin(out_shards)),
                 "outliers", fd._chash, out_shards)
@@ -1111,18 +1131,22 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
             store.overwrite_shards(info_part, "component_info", fd._chash,
                                    cid_shards)
 
-        _mark("fin_scope")
-        from concurrent.futures import ThreadPoolExecutor
+        writers = (_upd_knn, _upd_best_nn_outliers, _upd_components)
+    else:
+        # the same writers run()'s tail uses, over the ghost-free pair set
+        writers = derived_table_writers(fd, fd.docs(), scored_all, sim_all)
+    _mark("fin_scope")
 
-        def _timed(f):
-            f()
-            _mark(f"fin_{f.__name__.lstrip('_')}")
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [pool.submit(_timed, f) for f in
-                    (_upd_knn, _upd_best_nn_outliers, _upd_components)]
-            for f in futs:
-                f.result()
+    def _timed(f):
+        f()
+        _mark(f"fin_{f.__name__.lstrip('_')}")
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [pool.submit(_timed, f) for f in writers]
+        for f in futs:
+            f.result()
     _mark("fin_derived")
 
     # refresh run_manifest so summary() reflects post-update state
@@ -1150,4 +1174,4 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
 
     # LAST: the heal tripwire (see docstring)
     store.refresh_marker("extracted", fd._chash)
-    return int(touched)
+    return int(touched), finalize

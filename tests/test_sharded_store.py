@@ -94,7 +94,9 @@ def test_tiny_batch_rewrites_few_shards(tiny_batch_run):
 
 
 def test_tiny_batch_result_equals_full_run(spark, tiny_batch_run, tmp_path):
-    fd, pages, tiny, _stats, _b, _a = tiny_batch_run
+    fd, pages, tiny, stats, _b, _a = tiny_batch_run
+    # 3 docs and their sources leave most of the 32 shards untouched
+    assert stats["finalize"] == "scoped"
     fd_full = FastdupSpark(spark, str(tmp_path / "full"))
     fd_full.run(pages.unionByName(tiny))
     for stage, cols in (("assignments", ("doc_id", "component_id")),
@@ -222,11 +224,15 @@ def test_overwrite_shards_replaces_flat_fallback_layout(spark, tmp_path):
     assert store.read_marker("t")["rows"] == 2
 
 
-def test_orc_store_format_end_to_end(spark, tmp_path):
+def test_orc_store_format_end_to_end(spark, tmp_path, monkeypatch):
     """Round-4 verdict #6: StageStore(fmt=...) is claimed format-agnostic —
     prove it with the in-box second format. Full run + incremental update
     on ORC must produce the same tables as the parquet store, with markers/
-    lineage still footer-derived (pyarrow ORC) and the scoped path engaged."""
+    lineage still footer-derived (pyarrow ORC) and the scoped path engaged.
+    The batch touches every shard, so the finalize gate is held open to keep
+    overwrite_shards on ORC covered."""
+    import fastdup_spark.streaming.incremental as inc
+    monkeypatch.setattr(inc, "_scoped_can_skip", lambda shards, n: True)
     data = generate_pages(300, seed=19)
     pages, _, _ = pages_to_spark(spark, data)
     pages = pages.cache()
@@ -246,6 +252,7 @@ def test_orc_store_format_end_to_end(spark, tmp_path):
     stats = fd_orc.update(new)
     assert stats["new_docs"] > 0
     assert 0 < stats["touched_docs"] < fd_orc.docs().count()  # scoped path
+    assert stats["finalize"] == "scoped"
 
     fd_pq = FastdupSpark(spark, str(tmp_path / "pq"))
     fd_pq.run(pages)
