@@ -158,29 +158,31 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     that are not integers always take the star rounds.
     """
     spark = edges.sparkSession
-    e = edges.select("src", "dst").filter("src != dst").distinct()
-    if e.isEmpty():
+    # Eagerly checkpoint every round: truncates lineage AND materializes the
+    # edge set once, so the digest (and the next round) read cached blocks
+    # instead of recomputing the whole iterative plan. The entry digest's
+    # count over those blocks decides emptiness and the driver gate, so the
+    # input plan runs exactly once.
+    e = edges.select("src", "dst").filter("src != dst").distinct() \
+        .localCheckpoint(eager=True)
+    prev = _edge_digest(e)
+    if prev[0] == 0:
         if vertices is None:
             schema = "doc_id bigint, component_id bigint"
             return spark.createDataFrame([], schema)
         return vertices.select(
             F.col("doc_id"), F.col("doc_id").alias("component_id"))
 
-    # Eagerly checkpoint every round: truncates lineage AND materializes the
-    # edge set once, so the digest (and the next round) read cached blocks
-    # instead of recomputing the whole iterative plan.
-    e = e.localCheckpoint(eager=True)
     gate = _CC_DRIVER_EDGES_MAX if driver_edges_max is None \
         else driver_edges_max
     # the driver path's contract: integer ids (np.int64 arrays)
     integral = all(isinstance(e.schema[c].dataType, IntegralType)
                    for c in ("src", "dst"))
-    if gate and integral and e.count() <= gate:
-        # one cheap count over checkpointed blocks buys skipping the whole
-        # round loop (each round: ~5 shuffles + checkpoint + digest job)
+    if gate and integral and prev[0] <= gate:
+        # a small graph skips the whole round loop (each round: ~5
+        # shuffles + checkpoint + digest job)
         comp = _driver_components(e)
     else:
-        prev = _edge_digest(e)
         for _ in range(max_iter):
             e = _small_star(_large_star(e)).distinct() \
                 .localCheckpoint(eager=True)

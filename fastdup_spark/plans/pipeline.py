@@ -83,19 +83,16 @@ def near_dup_pipeline(docs: DataFrame, cfg: PipelineConfig | None = None,
             "edges": edges, "assignments": asg}
 
 
-def _record_outlier_cutoff(fd, extra: dict | None = None,
-                           out_frame: DataFrame | None = None) -> None:
+def _record_outlier_cutoff(fd, extra: dict | None = None) -> None:
     """Stamp the realized outlier cutoff (max best_sim in the written
     table) into the outliers marker — the next update batch prunes its
     best_nn scan at this value instead of re-running the percentile job.
     ``extra`` counters (e.g. which rank path the cut took) ride along for
-    observability/tests. ``out_frame``: the already-materialized new
-    outlier set — its content equals the post-write table by construction
-    (untouched shards hold identical rows), so aggregating it skips the
-    write->read barrier on the scoped update path."""
-    src = out_frame if out_frame is not None \
-        else fd.store.read(fd.spark, "outliers")
-    c = src.agg(F.max("best_sim")).first()[0]
+    observability/tests. The max comes from the table's footer stats (exact,
+    no Spark job); a table without them (ORC, an empty table) aggregates."""
+    c = fd.store.footer_max("outliers", "best_sim")
+    if c is None:
+        c = fd.store.read(fd.spark, "outliers").agg(F.max("best_sim")).first()[0]
     m = fd.store.read_marker("outliers") or {}
     fd.store.refresh_marker(
         "outliers", fd._chash,

@@ -15,6 +15,13 @@ same PipelineConfig hash. The marker's `files` list carries per-output-file
 row counts — the per-partition lineage record. Format is parquet in this
 sandbox; on a cluster the same interface maps to Iceberg tables where the
 marker content lives in snapshot summary metadata (SURVEY §1.1).
+
+Everything the driver needs about a table's files comes from their footers,
+opened once per (path, mtime, size): per-file row counts (markers, lineage,
+tripwires), column max stats (`footer_max`) and the Spark schema JSON every
+Spark-written parquet footer carries. `read` hands that schema to Spark, so
+a stage-table read builds a plan without the schema-inference job Spark
+would otherwise start on every load.
 """
 
 from __future__ import annotations
@@ -25,6 +32,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Internal hash-bucket partition column for sharded stage tables (the
 # parquet-native approximation of Iceberg `bucket(N, doc_id)` partitioning):
@@ -52,7 +60,8 @@ class StageStore:
         # With auto-scaled shard counts a table can hold thousands of small
         # files; without the memo every marker refresh / tripwire re-opens
         # every footer (on Iceberg both come from the snapshot manifest).
-        self._lineage_memo: dict[str, tuple[float, int, int]] = {}
+        # (mtime, size, rows, Spark schema JSON or None) per data file
+        self._lineage_memo: dict[str, tuple[float, int, int, str | None]] = {}
         self._stat_memo: dict[tuple[str, str], tuple[float, int, object]] = {}
 
     # --- paths ---
@@ -147,7 +156,17 @@ class StageStore:
         rows coalesced per shard, so a batch adds O(touched-shards) files.
         A zero-row table is the FLAT schema-file fallback of `write`;
         hive-partitioned dirs must not mix with it, so a partitioned append
-        replaces it with a fresh partitioned write instead."""
+        replaces it with a fresh partitioned write instead. Rows land in
+        the table's column order (from its footer schema) whatever order
+        ``df`` has them in."""
+        # Spark takes a table's read schema from its first file by path, and
+        # part-file names are random: a batch whose columns come in another
+        # order would flip the read column order from one append to the next
+        schema = self._data_schema(self.table_path(stage))
+        if schema is not None:
+            data_cols = [c for c in df.columns if c not in (partition_by or [])]
+            if set(data_cols) == set(schema.names):
+                df = df.select(*schema.names, *(partition_by or []))
         params = self.shard_params(stage)
         if params is not None:
             id_col, n_shards = params
@@ -185,35 +204,71 @@ class StageStore:
         os.replace(tmp, self.marker_path(stage))
         return marker
 
+    @staticmethod
+    def _data_files(path: str) -> list[tuple[str, str]]:
+        """(path relative to the table dir, full path) of every data file,
+        sorted by path — the listing Spark's file index makes: names
+        starting with ``.``, and names starting with ``_`` that hold no
+        ``=`` (``_temporary``, ``_SUCCESS``), are skipped, files and dirs
+        alike, so ``_shard=3/`` is kept."""
+        def hidden(name):
+            return name.startswith(".") or (name.startswith("_") and "=" not in name)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not hidden(d)]
+            for fn in files:
+                if hidden(fn) or not fn.endswith((".parquet", ".orc")):
+                    continue
+                full = os.path.join(root, fn)
+                out.append((os.path.relpath(full, path), full))
+        return sorted(out)
+
+    def _footer(self, full: str) -> tuple[int, str | None]:
+        """(rows, Spark schema JSON) of one data file from its footer —
+        memoized per (path, mtime, size), so immutable files never re-open.
+        The schema JSON is the one Spark stores in every parquet footer it
+        writes (None for ORC, or a parquet file Spark did not write)."""
+        st = os.stat(full)
+        hit = self._lineage_memo.get(full)
+        if hit is not None and hit[0] == st.st_mtime and hit[1] == st.st_size:
+            return hit[2], hit[3]
+        if full.endswith(".parquet"):
+            import pyarrow.parquet as pq
+            md = pq.read_metadata(full)
+            rows = md.num_rows
+            js = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+            schema = js.decode() if js else None
+        else:
+            import pyarrow.orc as po
+            rows, schema = po.ORCFile(full).nrows, None
+        self._lineage_memo[full] = (st.st_mtime, st.st_size, rows, schema)
+        return rows, schema
+
     def _parquet_lineage(self, path: str) -> list[dict]:
         """Per-file row counts straight from the columnar footers (no Spark
         job). Named for the primary format; ORC footers are read the same
         way via pyarrow, so `StageStore(fmt="orc")` keeps the full marker/
         lineage/resume contract (an Iceberg deployment gets this from the
-        snapshot manifest instead). Footer reads are memoized per
-        (path, mtime, size) — immutable files never re-open."""
-        out = []
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                full = os.path.join(root, fn)
-                rel = os.path.relpath(full, path)
-                is_pq = fn.endswith(".parquet")
-                if not is_pq and not fn.endswith(".orc"):
-                    continue
-                st = os.stat(full)
-                hit = self._lineage_memo.get(full)
-                if hit is not None and hit[0] == st.st_mtime and hit[1] == st.st_size:
-                    out.append({"file": rel, "rows": hit[2]})
-                    continue
-                if is_pq:
-                    import pyarrow.parquet as pq
-                    rows = pq.ParquetFile(full).metadata.num_rows
-                else:
-                    import pyarrow.orc as po
-                    rows = po.ORCFile(full).nrows
-                self._lineage_memo[full] = (st.st_mtime, st.st_size, rows)
-                out.append({"file": rel, "rows": rows})
-        return out
+        snapshot manifest instead)."""
+        return [{"file": rel, "rows": self._footer(full)[0]}
+                for rel, full in self._data_files(path)]
+
+    def _data_schema(self, path: str) -> StructType | None:
+        """The table's data schema — partition columns excluded, exactly as
+        Spark's own inference yields it, from the same footer: the first
+        data file by path (Spark sorts the listing before it picks one).
+        None off parquet, for a table with no data file, or when that
+        footer does not open or carries no Spark schema."""
+        if self.fmt != "parquet":
+            return None
+        files = self._data_files(path)
+        if not files:
+            return None
+        try:
+            js = self._footer(files[0][1])[1]
+        except (OSError, ValueError):
+            return None
+        return None if js is None else StructType.fromJson(json.loads(js))
 
     def lineage(self, stage: str) -> list[dict]:
         """Per-file row counts of a stage table (``file`` relative to the
@@ -232,31 +287,27 @@ class StageStore:
             return None
         import pyarrow.parquet as pq
         mx = None
-        for root, _dirs, files in os.walk(self.table_path(stage)):
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, fn)
-                st = os.stat(full)
-                hit = self._stat_memo.get((full, col))
-                if hit is not None and hit[0] == st.st_mtime and hit[1] == st.st_size:
-                    fmax = hit[2]
-                else:
-                    md = pq.ParquetFile(full).metadata
-                    fmax = None
-                    for rg in range(md.num_row_groups):
-                        row_group = md.row_group(rg)
-                        for ci in range(row_group.num_columns):
-                            c = row_group.column(ci)
-                            if c.path_in_schema != col:
-                                continue
-                            s = c.statistics
-                            if s is None or not s.has_min_max:
-                                return None  # stats disabled -> caller falls back
-                            fmax = s.max if fmax is None else max(fmax, s.max)
-                    self._stat_memo[(full, col)] = (st.st_mtime, st.st_size, fmax)
-                if fmax is not None:
-                    mx = fmax if mx is None else max(mx, fmax)
+        for _rel, full in self._data_files(self.table_path(stage)):
+            st = os.stat(full)
+            hit = self._stat_memo.get((full, col))
+            if hit is not None and hit[0] == st.st_mtime and hit[1] == st.st_size:
+                fmax = hit[2]
+            else:
+                md = pq.read_metadata(full)
+                fmax = None
+                for rg in range(md.num_row_groups):
+                    row_group = md.row_group(rg)
+                    for ci in range(row_group.num_columns):
+                        c = row_group.column(ci)
+                        if c.path_in_schema != col:
+                            continue
+                        s = c.statistics
+                        if s is None or not s.has_min_max:
+                            return None  # stats disabled -> caller falls back
+                        fmax = s.max if fmax is None else max(fmax, s.max)
+                self._stat_memo[(full, col)] = (st.st_mtime, st.st_size, fmax)
+            if fmax is not None:
+                mx = fmax if mx is None else max(mx, fmax)
         return mx
 
     def write_sharded(self, df: DataFrame, stage: str, config_hash: str,
@@ -371,7 +422,19 @@ class StageStore:
 
     def read(self, spark: SparkSession, stage: str,
              keep_shard: bool = False) -> DataFrame:
-        df = spark.read.format(self.fmt).load(self.table_path(stage))
+        """The stage table as a DataFrame — a plan, no Spark job. On
+        parquet the data schema comes from the footers (`_data_schema`), so
+        Spark skips its one-job schema inference; partition columns are left
+        out of it and still come from the directory names, typed as
+        inference types them (``is_valid`` reads back as STRING). Other
+        formats, an empty dir or an unreadable footer load as Spark infers.
+        The shard column is cast to int and dropped unless ``keep_shard``."""
+        path = self.table_path(stage)
+        reader = spark.read.format(self.fmt)
+        schema = self._data_schema(path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.load(path)
         if SHARD_COL in df.columns:
             # partition columns read back as strings; the shard id is an int
             df = df.withColumn(SHARD_COL, F.col(SHARD_COL).cast("int"))

@@ -807,7 +807,7 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                           mem_bloom=None,
                           committed_ids_local: list | None = None,
                           _timings: dict | None = None,
-                          _t0: float | None = None) -> int:
+                          _t0: float | None = None) -> tuple[int, str]:
     """Post-append bookkeeping: counts, markers, derived tables, manifest.
 
     extract_counts is DERIVED from the extracted table's parquet footers
@@ -995,7 +995,7 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                 out_new.filter(shard_expr("doc_id", n_sh).isin(out_shards)),
                 "outliers", fd._chash, out_shards)
             _record_outlier_cutoff(fd, extra={
-                "rank_path": rank_stats.get("path")}, out_frame=out_new)
+                "rank_path": rank_stats.get("path")})
 
         # shard set of the batch's new docs — pure Python when the ids are
         # already on the driver, else one collect shared by both uses below

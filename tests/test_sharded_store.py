@@ -111,6 +111,25 @@ def test_tiny_batch_result_equals_full_run(spark, tiny_batch_run, tmp_path):
         assert ta == tb, f"scoped {stage} diverged from full run"
 
 
+def test_read_schema_matches_inference_after_scoped_update(spark,
+                                                           tiny_batch_run):
+    """StageStore.read passes Spark the footer schema: after overwrite_shards
+    rewrote some shards and appends added files, it still equals what
+    Spark's own inference yields, partition columns included."""
+    from fastdup_spark.plans.pipeline import STAGES
+    fd = tiny_batch_run[0]
+    for t in STAGES:
+        got = fd.store.read(spark, t, keep_shard=True).schema
+        want = spark.read.format("parquet").load(fd.store.table_path(t)).schema
+        assert got == want, t
+
+
+def test_outlier_cutoff_after_scoped_update(spark, tiny_batch_run):
+    fd = tiny_batch_run[0]
+    want = fd.store.read(spark, "outliers").agg(F.max("best_sim")).first()[0]
+    assert fd.store.read_marker("outliers")["counters"]["cutoff"] == want
+
+
 def test_resolve_store_shards():
     """~25k docs per shard, pow2, floored at one shard per core (the floor
     itself capped at 32) and capped at 65536."""
