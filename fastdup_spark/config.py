@@ -61,13 +61,14 @@ class PipelineConfig:
     resume: bool = True                # skip stages with completed markers
     # hash-bucket count for the doc-keyed stage tables (extracted /
     # signatures and the derived knn / best_nn / assignments /
-    # component_info / outliers): incremental updates read and rewrite only
-    # the buckets containing touched ids (parquet dynamic partition
-    # overwrite + partition-pruned scans ≈ Iceberg bucket(N, doc_id) +
-    # MERGE). None (default) auto-scales at the first run(): ~25k docs per
-    # shard, never fewer than one shard per core (capped at 32) — see
-    # resolve_store_shards — and the resolved value persists in the work
-    # dir (store_layout.json) so later runs and updates keep the layout.
+    # component_info / outliers): an incremental update's scans of
+    # `extracted` and `signatures` (membership, idempotency, verify, LCS
+    # text) read only the buckets holding the batch's ids (partition-pruned
+    # scans ≈ Iceberg bucket(N, doc_id)). None (default) auto-scales at the
+    # first run(): ~25k docs per shard, never fewer than one shard per core
+    # (capped at 32) — see resolve_store_shards — and the resolved value
+    # persists in the work dir (store_layout.json) so later runs and
+    # updates keep the layout.
     # Set explicitly to pin a layout (tests; fixed deployments).
     store_shards: int | None = None
 
@@ -89,9 +90,9 @@ class PipelineConfig:
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
-# ~25k docs per shard: incremental rewrite volume for a b-doc batch is
-# ≈ touched_shards x docs_per_shard rows — a FIXED absolute cost per
-# touched doc regardless of corpus size — while the full run's file count
+# ~25k docs per shard: a b-doc batch's pruned extracted/signatures scans
+# read ≈ touched_shards x docs_per_shard rows — a FIXED absolute cost per
+# batch doc regardless of corpus size — while the full run's file count
 # stays O(corpus/25k) (over-sharding was measured to cost 3x at sf0.1:
 # 1024 dirs x 7 tables of pyarrow footer lineage + dir listings dominated;
 # BENCH/BASELINE.md round-6 bisect). Small corpora hit the floor, one

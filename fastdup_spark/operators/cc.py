@@ -20,8 +20,8 @@ part 3) and lets the digest read cached blocks.
 
 Edge sets up to ``_CC_DRIVER_EDGES_MAX`` with integral ids skip the rounds:
 they are collected and resolved by ``_union_find_edges``, the one
-vectorized union-find in the package (semdedup's per-cluster kernel and
-the incremental update's label contraction call it too).
+vectorized union-find in the package (semdedup's per-cluster kernel
+calls it too).
 
 Determinism: component id == min doc_id of the component (stable across
 partitionings and cluster sizes).

@@ -120,9 +120,7 @@ def _distributed_rank_head(pruned: DataFrame, k: int, n_pruned: int,
 
 def exact_rank_head(df: DataFrame, k: int, n: int, sort_col: str,
                     id_col: str, ascending: bool = True,
-                    margin: float = 1.5,
-                    cutoff_hint: float | None = None,
-                    stats: dict | None = None) -> DataFrame:
+                    margin: float = 1.5) -> DataFrame:
     """Deterministic exact top/bottom-k by (sort_col, id_col) without a
     global single-partition sort of all ``n`` rows.
 
@@ -135,70 +133,35 @@ def exact_rank_head(df: DataFrame, k: int, n: int, sort_col: str,
     can make percentile_approx land short of k survivors), fall back to
     ranking the full table — the exact bottom-k contract always wins over
     the shortcut.
-
-    ``cutoff_hint`` (e.g. the previous batch's realized cutoff, stored in
-    a stage marker) skips the percentile job entirely: prune directly at
-    the hint and VERIFY with the survivor count — if the hint under-prunes
-    (< k survivors), fall back to the percentile path. With the table's
-    files sorted on ``sort_col``, the hint prune is a pushed predicate
-    that skips row groups, so the common incremental case reads ~k rows
-    instead of scanning the column twice.
     """
-    if stats is None:
-        stats = {}
     if k <= 0:
-        stats["path"] = "empty"
         return df.limit(0)
     # NULL sort values never rank (the pruned path's cutoff filter and the
     # fallback's full sort would otherwise disagree on their placement)
     df = df.filter(F.col(sort_col).isNotNull())
-
-    def _prune_at(cutoff):
-        return df.filter(
-            F.col(sort_col) <= F.lit(cutoff) if ascending
-            else F.col(sort_col) >= F.lit(cutoff))
-
-    if cutoff_hint is not None:
-        pruned = _prune_at(cutoff_hint)
-        n_pruned = pruned.count()
-        if n_pruned >= k:
-            stats.update({"path": "hint", "n_pruned": int(n_pruned)})
-            return _distributed_rank_head(pruned, k, n_pruned, sort_col,
-                                          id_col, ascending)
-        # hint under-pruned (the true cutoff moved past it): fall through
     frac = min(1.0, (k / max(n, 1)) * margin)
     q = frac if ascending else 1.0 - frac
     cutoff = df.agg(
         F.percentile_approx(sort_col, q, 10000).alias("c")).collect()[0]["c"]
     if cutoff is None:
-        stats["path"] = "empty"
         return df.limit(0)
-    pruned = _prune_at(cutoff)
+    pruned = df.filter(F.col(sort_col) <= F.lit(cutoff) if ascending
+                       else F.col(sort_col) >= F.lit(cutoff))
     n_pruned = pruned.count()
     if n_pruned < k:
         pruned, n_pruned = df, max(n, k)
-        stats.update({"path": "full_fallback", "n_pruned": int(n_pruned)})
-    else:
-        stats.update({"path": "percentile", "n_pruned": int(n_pruned)})
     return _distributed_rank_head(pruned, k, n_pruned, sort_col, id_col,
                                   ascending)
 
 
 def outliers_by_percentile(best_nn: DataFrame, pct: float,
-                           n: int | None = None,
-                           cutoff_hint: float | None = None,
-                           stats: dict | None = None) -> DataFrame:
+                           n: int | None = None) -> DataFrame:
     """Bottom floor(pct*n) docs by (best_sim asc, doc_id asc) — deterministic.
 
     Pass ``n`` (total docs) when already known from a stage marker to save
-    the count job, and ``cutoff_hint`` (the previous realized cutoff) to
-    skip the percentile scan — see `exact_rank_head`. ``stats`` (mutated in
-    place) records which path the cut took ("hint" / "percentile" /
-    "full_fallback") and the pruned row count — callers persist it so tests
-    can pin the hint trigger rate.
+    the count job — see `exact_rank_head`.
     """
     if n is None:
         n = best_nn.count()
     return exact_rank_head(best_nn, int(n * pct), n, "best_sim", "doc_id",
-                           ascending=True, cutoff_hint=cutoff_hint,
-                           stats=stats)
+                           ascending=True)

@@ -83,20 +83,18 @@ def near_dup_pipeline(docs: DataFrame, cfg: PipelineConfig | None = None,
             "edges": edges, "assignments": asg}
 
 
-def _record_outlier_cutoff(fd, extra: dict | None = None) -> None:
+def _record_outlier_cutoff(fd) -> None:
     """Stamp the realized outlier cutoff (max best_sim in the written
-    table) into the outliers marker — the next update batch prunes its
-    best_nn scan at this value instead of re-running the percentile job.
-    ``extra`` counters (e.g. which rank path the cut took) ride along for
-    observability/tests. The max comes from the table's footer stats (exact,
-    no Spark job); a table without them (ORC, an empty table) aggregates."""
+    table) into the outliers marker, so the realized cut can be read
+    without a scan. The max comes from the table's footer stats (exact, no
+    Spark job); a table without them (ORC, an empty table) aggregates."""
     c = fd.store.footer_max("outliers", "best_sim")
     if c is None:
         c = fd.store.read(fd.spark, "outliers").agg(F.max("best_sim")).first()[0]
     m = fd.store.read_marker("outliers") or {}
     fd.store.refresh_marker(
         "outliers", fd._chash,
-        counters={**m.get("counters", {}), **(extra or {}),
+        counters={**m.get("counters", {}),
                   "cutoff": None if c is None else float(c)})
 
 
@@ -105,14 +103,13 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
     """Full rebuild of the doc-keyed derived tables from the verified pair
     table, as three independent thunks — knn | best_nn -> outliers |
     assignments -> component_info — for the caller to run concurrently:
-    run() submits them to its stage pool, update()'s rebuild finalize to
-    its own thread pool.
+    run() submits them to its stage pool, update()'s finalize to its own
+    thread pool.
 
     ``docs`` (doc_id, ...) gives every doc a best_nn row and a singleton
     component; ``scored`` is pairs_scored; ``sim`` its >= threshold edges.
     ``done(stage)`` skips stages already complete under resume. Every
-    table is hash-sharded by pmod(id, fd.n_shards), the layout the scoped
-    update path rewrites shard by shard."""
+    table is hash-sharded by pmod(id, fd.n_shards)."""
     cfg, store, chash = fd.config, fd.store, fd._chash
 
     def knn():
@@ -125,12 +122,11 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
                                 fd.n_shards, counters={"k": cfg.knn_k})
 
     def best_nn_outliers():
-        # (ref: bottom 5% NN distance) best_nn persists as its own stage so
-        # updates re-derive it only for docs touched by new edges
+        # (ref: bottom 5% NN distance)
         if not done("best_nn"):
             bn = best_neighbor(docs, scored, sim_col="jaccard")
             # shard files sorted by best_sim: the outlier cut's pushed
-            # range predicate skips row groups on update batches
+            # range predicate skips row groups
             store.write_sharded(bn, "best_nn", chash, fd.n_shards,
                                 sort_within=["best_sim"])
         if not done("outliers"):

@@ -37,9 +37,9 @@ from pyspark.sql.types import StructType
 # Internal hash-bucket partition column for sharded stage tables (the
 # parquet-native approximation of Iceberg `bucket(N, doc_id)` partitioning):
 # tables written with `write_sharded` lay out rows in `_shard=K/` dirs keyed
-# by pmod(id, n_shards), so incremental updates can rewrite ONLY the shards
-# containing touched ids via dynamic partition overwrite (Iceberg MERGE INTO
-# would hit the same files). `read` strips the column — it is store-internal.
+# by pmod(id, n_shards), so an incremental update's scans of a doc-keyed
+# table can prune to the shards holding the batch's ids. `read` strips the
+# column — it is store-internal.
 SHARD_COL = "_shard"
 
 
@@ -98,8 +98,8 @@ class StageStore:
         path = self.table_path(stage)
         if os.path.exists(path):
             shutil.rmtree(path)
-        # a crash mid-overwrite_shards can strand this stage's temp dir;
-        # the full rewrite path is where such a crash heals, so sweep it
+        # an older build's shard-scoped overwrite staged its content in
+        # this temp dir, and a crash could strand it; a full write sweeps it
         shutil.rmtree(path + ".tmp_overwrite", ignore_errors=True)
         if os.path.exists(self.marker_path(stage)):
             os.remove(self.marker_path(stage))
@@ -317,8 +317,8 @@ class StageStore:
         """Full stage write hash-bucketed into `_shard=pmod(id, n_shards)/`
         partition dirs. The pre-write repartition on the shard column keeps
         output to ~one file per shard instead of (tasks x shards) fragments.
-        Shard params land in the marker counters so incremental writers can
-        verify the layout before taking the scoped path. ``sort_within``
+        Shard params land in the marker counters, where shard-pruned reads
+        find the layout (`shard_params`). ``sort_within``
         orders rows inside each shard file, tightening parquet row-group
         min/max stats so pushed range predicates on those columns skip
         row groups (e.g. best_nn sorted by best_sim for the outlier cut)."""
@@ -337,88 +337,6 @@ class StageStore:
         if c.get("sharded_by") and c.get("n_shards"):
             return c["sharded_by"], int(c["n_shards"])
         return None
-
-    def overwrite_shards(self, df: DataFrame, stage: str, config_hash: str,
-                         shard_ids: list[int],
-                         counters: dict | None = None,
-                         sort_within: list[str] | None = None) -> dict:
-        """Rewrite ONLY the shards in ``shard_ids`` of a sharded stage table:
-        ``df`` replaces their content (dynamic partition overwrite — shards
-        absent from ``shard_ids`` are untouched on disk), and listed shards
-        for which ``df`` has no rows are deleted. Crash contract matches
-        `write`: the marker is removed first and republished from footers
-        only after the data lands, so an interrupted overwrite leaves the
-        stage incomplete (-> full recompute on resume), never silently stale.
-
-        Requires every row of ``df`` to belong to a shard in ``shard_ids``
-        (callers scope both from the same touched-id set).
-
-        Implementation (round 6): the new content is written ONCE to a
-        sibling temp dir while the live table stays readable (``df`` may
-        read the very shards being replaced), then shard dirs are swapped
-        in with driver-side renames. This replaces the previous eager
-        localCheckpoint + present-shards collect + dynamic-overwrite write
-        (three jobs materializing the data twice) with a single Spark job;
-        the ``present`` shard set and the scope-safety check come from the
-        temp dir's parquet footers for free. On Iceberg the same call maps
-        to MERGE INTO / RewriteFiles, where the snapshot swap is native."""
-        params = self.shard_params(stage)
-        if params is None:
-            raise ValueError(f"stage {stage!r} is not sharded — use write_sharded")
-        id_col, n_shards = params
-        if counters is None:
-            counters = (self.read_marker(stage) or {}).get("counters", {})
-        out = df.withColumn(SHARD_COL, shard_expr(id_col, n_shards)) \
-                .repartition(F.col(SHARD_COL))
-        if sort_within:
-            out = out.sortWithinPartitions(SHARD_COL, *sort_within)
-
-        tmp = self.table_path(stage) + ".tmp_overwrite"
-        shutil.rmtree(tmp, ignore_errors=True)  # stale temp from a crash
-        out.write.mode("overwrite").format(self.fmt) \
-            .partitionBy(SHARD_COL).save(tmp)
-        tmp_lineage = self._parquet_lineage(tmp)
-        present = {int(x["file"].split("=", 1)[1].split(os.sep, 1)[0])
-                   for x in tmp_lineage
-                   if x["file"].startswith(f"{SHARD_COL}=")}
-        if not present <= set(shard_ids):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"overwrite_shards({stage}): df carries rows for shards "
-                f"{sorted(present - set(shard_ids))} outside the declared "
-                "scope — the write would clobber unscoped partitions")
-
-        # crash contract: the marker disappears BEFORE any table mutation,
-        # so an interruption mid-swap leaves the stage incomplete (-> full
-        # recompute on resume), never silently stale
-        if os.path.exists(self.marker_path(stage)):
-            os.remove(self.marker_path(stage))
-        # a zero-row table sits in the FLAT fallback layout (no _shard
-        # dirs); hive dirs must not mix with its schema file — drop it
-        if any(not x["file"].startswith(f"{SHARD_COL}=")
-               for x in self._parquet_lineage(self.table_path(stage))):
-            shutil.rmtree(self.table_path(stage))
-        os.makedirs(self.table_path(stage), exist_ok=True)
-        # every listed shard's old content goes (shards whose new content
-        # is empty are deleted, not replaced), then the fresh dirs move in
-        for s in set(shard_ids):
-            d = os.path.join(self.table_path(stage), f"{SHARD_COL}={s}")
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        for s in present:
-            os.replace(os.path.join(tmp, f"{SHARD_COL}={s}"),
-                       os.path.join(self.table_path(stage),
-                                    f"{SHARD_COL}={s}"))
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not self._parquet_lineage(self.table_path(stage)):
-            # every shard emptied: keep the table readable with a zero-row
-            # schema file (same fallback as `write` on empty input). Built
-            # from an explicit empty frame — df's source shards may no
-            # longer exist on disk at this point.
-            df.sparkSession.createDataFrame([], out.schema) \
-                .write.mode("overwrite").format(self.fmt) \
-                .save(self.table_path(stage))
-        return self.refresh_marker(stage, config_hash, counters=counters)
 
     def read(self, spark: SparkSession, stage: str,
              keep_shard: bool = False) -> DataFrame:

@@ -11,37 +11,22 @@ new WARC pages, keyed by a `warc_ts` high-water mark:
     Structured Streaming foreachBatch sink would run;
   * verify on the new pairs only (append to pairs_scored/similarity);
   * the derived tables (knn, best_nn, outliers, assignments,
-    component_info) are finalized by one of two branches, gated on the
-    input: when the batch's affected docs (endpoints of its new edges plus
-    the new docs) leave some store shard untouched, the SCOPED branch
-    re-derives rows ONLY for those docs and rewrites only their shards —
-    unaffected rows carry over via anti-join; when the affected set spans
-    every shard (the usual trickle at one shard per core) nothing could be
-    skipped, so run()'s own derived-table writers REBUILD the tables over
-    the whole pair table in fewer, larger Spark jobs;
-  * on the scoped branch, connected components resolve by CONTRACTION:
-    batches only ever ADD edges, so merging is monotone — map the new
-    edges' endpoints to their existing component labels, resolve the tiny
-    component-level graph with operators/cc.py's vectorized union-find on
-    the driver (broadcast-sized by construction; above cc's driver-edge
-    gate the distributed large-star/small-star job guards giant
-    backfills), and relabel the assignments table through the merge map.
-    Component labels are min-doc_ids and the union-find keeps the min as
-    root, so merged labels come out exactly as a from-scratch run would
-    produce. The rebuild branch (and the crash heal) re-resolves globally
-    from pairs_scored.
+    component_info) are rebuilt by run()'s own writers over the whole pair
+    table: connected components and the outlier percentile cut are global,
+    and a small batch's finalize costs Spark jobs, not rows — a few large
+    jobs over the whole table beat re-deriving the touched neighbourhood
+    shard by shard (measured: 20k-100k-doc stores at 64 shards, 3-10-doc
+    batches, 4 cores — the rebuild was the faster finalize every time).
 
 Every step update() shares with run() has ONE implementation, and this
 module only scopes it to the batch: extraction (functions/extract.py
 extract_pages), the verify join (functions/similarity.py score_pairs),
-the union-find (operators/cc.py), appends in the store's layout
-(StageStore.append) and the full derived-table rebuild of the rebuild
-and heal paths (plans/pipeline.py derived_table_writers, run()'s own
-tail).
+appends in the store's layout (StageStore.append) and the derived-table
+rebuild (plans/pipeline.py derived_table_writers, run()'s own tail).
 
-O(batch) scaling (round-5 verdict #2/#3): the doc-keyed base tables
-(`extracted`, `signatures`) share the derived tables' bucket(N, doc_id)
-layout, so every per-batch corpus touch prunes at the file index:
+O(batch) ingest (round-5 verdict #2/#3): the doc-keyed base tables
+(`extracted`, `signatures`) are laid out by bucket(N, doc_id), so every
+per-batch corpus touch on the ingest path prunes at the file index:
   * batch membership is decided by a persisted Bloom bitmap probed
     DRIVER-SIDE (streaming/membership.py — zero Spark jobs for an
     all-new batch, the steady trickle state); only maybe-seen ids
@@ -56,21 +41,17 @@ layout, so every per-batch corpus touch prunes at the file index:
   * the LCS text fetch reads only the shards holding the candidate pairs'
     endpoints instead of the full text column.
 N auto-scales with corpus size (config.resolve_store_shards) and persists
-in store_layout.json, so a batch small against N touches O(batch) shards
-end to end. Independent stage appends and the derived-table writers run
-from concurrent driver threads (same pattern as run()), collapsing the
-fixed per-job overhead that dominates small batches.
+in store_layout.json. Independent stage appends and the derived-table
+writers run from concurrent driver threads (same pattern as run()),
+collapsing the fixed per-job overhead that dominates small batches.
 
 Fixed-job-count budget (round-6 verdict #3): for batches under
 _DRIVER_IDS_MAX the batch's (doc_id, is_valid) rows are collected to the
 driver ONCE at update start; every shard list (membership scan,
-idempotency scans, the affected-doc histogram, the new-doc singleton
-shards) and every batch count then comes from pure Python instead of a
-dedicated Spark job, and the affected set / CC edge list are literal
-frames built from one collect of the pinned scored increment. This cuts a
-clean update from 52 to 41 Spark jobs (measured by job-group id count at
-n=400) — on small batches the eliminated fixed per-job overhead, not data
-volume, is the cost. Above the cap every site keeps the DataFrame shape.
+idempotency scans) and every batch count then comes from pure Python
+instead of a dedicated Spark job — on small batches the eliminated fixed
+per-job overhead, not data volume, is the cost. Above the cap every site
+keeps the DataFrame shape.
 
 Crash-safety model (exactly-once per batch):
   * `extracted` is appended LAST. Batch membership is decided by an anti-join
@@ -93,27 +74,24 @@ Crash-safety model (exactly-once per batch):
     table), exact because any row a replay could need to repair belongs to
     a doc of the batch that appended it, and appends always precede the
     extracted append that would commit those docs.
-  * the replay's derived-table scope comes from the PERSISTED pairs table,
-    not the replay's own (empty, already-anti-joined) scored increment:
-    every persisted pair touching this batch's docs re-enters the
-    increment derivations / affected set / CC contraction, so a replay of
-    a batch that crashed mid-append heals it (round-3 ADVICE, medium).
+  * the replay's increments come from the PERSISTED pairs table, not the
+    replay's own (empty, already-anti-joined) scored increment: every
+    persisted pair touching this batch's docs re-enters the similarity/
+    containment derivations, so a replay of a batch that crashed
+    mid-append heals it (round-3 ADVICE, medium).
   * GHOST docs — uncommitted (in signatures, not extracted) and NOT in the
     current batch, i.e. a crashed batch that was not redelivered — are
     quarantined from every derivation: their pairs are deferred (excluded
-    from the similarity/containment increments, the CC contraction and the
-    knn/best_nn scope) until the doc actually commits via redelivery, and
-    the full-rebuild path filters them out of its inputs the same way
-    (round-4 ADVICE, medium: a ghost min-label would otherwise mint a
-    NULL-count component and phantom assignment rows).
+    from the similarity/containment increments and filtered out of the
+    derived-table rebuild's inputs) until the doc actually commits via
+    redelivery (round-4 ADVICE, medium: a ghost min-label would otherwise
+    mint a NULL-count component and phantom assignment rows).
   * a crash INSIDE the bookkeeping tail (after the extracted append) leaves
     the extracted marker stale; every update start compares the marker's
-    row count against the parquet footers and, when stale, forces the
-    full (affected=None) rebuild in its own finalize — even when the next
-    batch carries genuinely new docs and its affected set would otherwise
-    pass the scoped gate (round-3 ADVICE, low). That heal reports the whole
-    corpus as touched; the gated rebuild (affected set spans every shard)
-    reports the affected-set size.
+    row count against the parquet footers. The next finalize's rebuild
+    heals the derived tables either way; a stale marker also makes a
+    fully-redelivered batch (nothing to append) run the finalize, and the
+    update reports the whole corpus as touched (round-3 ADVICE, low).
   * after the appends, stage markers are regenerated from the parquet
     footers (rows + per-file lineage stay truthful; footer reads are
     memoized per immutable file in plans/store.py) and run_manifest is
@@ -124,20 +102,14 @@ from __future__ import annotations
 
 import logging
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastdup_spark.functions.extract import extract_pages
 from fastdup_spark.functions.signatures import with_signatures
 from fastdup_spark.functions.similarity import score_pairs
-from fastdup_spark.operators.cc import (
-    _CC_DRIVER_EDGES_MAX, _min_roots, connected_components,
-)
 from fastdup_spark.operators.lsh import band_buckets
-from fastdup_spark.plans.pipeline import (
-    _record_outlier_cutoff, derived_table_writers,
-)
+from fastdup_spark.plans.pipeline import derived_table_writers
 from fastdup_spark.plans.store import SHARD_COL, shard_expr
 
 _LOG = logging.getLogger("fastdup_spark.incremental")
@@ -148,12 +120,11 @@ _LOG = logging.getLogger("fastdup_spark.incremental")
 _BROADCAST_BATCH_MAX = 2_000_000
 # Largest batch whose id/validity set is collected to the DRIVER once at
 # update start (≤ ~5 MB). Below this every per-batch shard set (membership
-# scan, idempotency scans, the affected-doc histogram, the new-doc singleton
-# shards) is computed in pure Python from that one list instead of a
-# dedicated Spark collect job each — the fixed per-job overhead those jobs
-# carried is what dominates small batches on the update path (round-6
-# verdict #3). Above the cap (bulk backfill) every site falls back to the
-# DataFrame shape unchanged.
+# scan, idempotency scans) is computed in pure Python from that one list
+# instead of a dedicated Spark collect job each — the fixed per-job overhead
+# those jobs carried is what dominates small batches on the update path
+# (round-6 verdict #3). Above the cap (bulk backfill) every site falls back
+# to the DataFrame shape unchanged.
 _DRIVER_IDS_MAX = 200_000
 
 
@@ -264,7 +235,7 @@ def incremental_update(fd, new_pages: DataFrame,
         marker_stale = True
     # (2) uncommitted docs (in signatures, not yet in extracted) = a prior
     #     batch crashed BEFORE its extracted append; its persisted pairs
-    #     must re-enter the affected set on this replay. Detected from
+    #     must re-enter the increments on this replay. Detected from
     #     FOOTERS alone in the common case: every committed valid doc has
     #     exactly ONE signatures row (both run() and update() append
     #     signatures idempotently before the extracted commit, and
@@ -398,16 +369,15 @@ def incremental_update(fd, new_pages: DataFrame,
         # fully-redelivered batch. If a prior run crashed AFTER the extracted
         # append but BEFORE the bookkeeping tail, the extracted marker is
         # stale (tripwire #1 above) — heal with a full rebuild.
-        touched, finalize = 0, None
+        touched = 0
         if marker_stale:
             _LOG.info("incremental: stale extracted marker on a fully-"
                       "redelivered batch — healing with a full rebuild")
-            touched, finalize = _finalize_bookkeeping(
-                fd, n_appended_pairs=0, mem_bloom=mem_bloom,
-                committed_ids_local=committed_ids)
+            touched = _finalize_bookkeeping(
+                fd, mem_bloom=mem_bloom, committed_ids_local=committed_ids)
         return {"new_docs": 0, "new_pairs": 0, "touched_docs": touched,
                 "path": "heal_rebuild" if marker_stale else "noop",
-                "finalize": finalize, "hwm": str(hwm)}
+                "hwm": str(hwm)}
     if new_ids_local is not None:
         # literal frame: every downstream broadcast/semi sees a known-tiny
         # relation and no job ever re-derives the id set
@@ -554,7 +524,7 @@ def incremental_update(fd, new_pages: DataFrame,
     # quiescence: no append thread outlives this block even when the
     # scoring checkpoint or a future raises, so an in-process retry or
     # heal rebuild can never interleave with a zombie write
-    pool = ThreadPoolExecutor(max_workers=5)
+    pool = ThreadPoolExecutor(max_workers=6)
     try:
         early_futs = [
             pool.submit(store.append,
@@ -579,7 +549,6 @@ def incremental_update(fd, new_pages: DataFrame,
             # the similarity/containment tables cannot already hold any of
             # them — zero pair-table reads, zero anti-joins on the clean path
             rel_active = scored_new
-            n_rel = n_pairs
             sim_new = rel_active.filter(F.col("jaccard") >= cfg.threshold) \
                 .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
         else:
@@ -593,7 +562,6 @@ def incremental_update(fd, new_pages: DataFrame,
             if has_ghosts:
                 rel_active = _no_ghost(rel_active, ghosts)
             rel_active = rel_active.localCheckpoint(eager=True)
-            n_rel = rel_active.count()
             sim_new = (
                 rel_active.filter(F.col("jaccard") >= cfg.threshold)
                 .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
@@ -645,12 +613,23 @@ def incremental_update(fd, new_pages: DataFrame,
                 F.col("lcs_len") >= cfg.lcs_min_len)
             store.append(lcs_new, "containment")
 
+        def _count_touched():
+            # touched docs: endpoints of the batch's pairs plus every new
+            # doc (rel_active holds every persisted pair touching a doc
+            # committing in this batch, a crashed batch's replay included,
+            # ghost pairs excluded). Read-only, so it runs in the appends'
+            # shadow instead of as one more serial job after the finalize.
+            return (rel_active.select(F.col("src").alias("doc_id"))
+                    .unionByName(rel_active.select(F.col("dst").alias("doc_id")))
+                    .unionByName(new_ids).distinct().count())
+
+        touched_fut = pool.submit(_count_touched)
         late_futs = [
             pool.submit(store.append, scored_new, "pairs_scored"),
             pool.submit(store.append, sim_new, "similarity"),
             pool.submit(_append_containment),
         ]
-        for f in early_futs + late_futs:
+        for f in early_futs + late_futs + [touched_fut]:
             f.result()
     finally:
         # waits for running appends, cancels queued ones — by the time any
@@ -665,55 +644,14 @@ def incremental_update(fd, new_pages: DataFrame,
     store.append(new_extracted, "extracted", partition_by=["is_valid"])
     _mark("extracted_append")
 
-    # docs whose neighbor state can have changed: endpoints of the batch's
-    # pairs plus every new doc (new docs need best_nn/knn rows even with
-    # zero edges) — the knn/outlier tail re-derives ONLY these.
     if marker_stale:
-        # tripwire: a prior finalize crashed after its extracted append;
-        # scoping cannot see which derived rows it left stale -> full rebuild
-        _LOG.info("incremental: stale extracted marker — taking the "
-                  "full-rebuild path to heal derived tables")
-        affected, new_cc_edges, new_ids_arg = None, None, None
-        affected_local = None
-    else:
-        # unified scope (clean batch AND crashed-batch replay): rel_active
-        # already holds every persisted pair touching a doc committing in
-        # this batch — a replay of a crashed batch finds its pairs here
-        # even though its own scored_new anti-joined them away. Ghost-
-        # touching edges are absent by construction (deferred).
-        if new_ids_local is not None and n_rel <= _DRIVER_IDS_MAX:
-            # driver-side scope: rel_active is pinned and batch-bounded —
-            # ONE collect yields the affected set, its shard histogram, and
-            # the CC edge list, replacing the affected-pin job, the shard-
-            # histogram job, and the new-doc shard collects in finalize
-            rel_rows = rel_active.select("src", "dst", "jaccard").collect()
-            affected_local = sorted({r["src"] for r in rel_rows}
-                                    | {r["dst"] for r in rel_rows}
-                                    | set(new_ids_local))
-            affected = spark.createDataFrame(
-                [(i,) for i in affected_local], "doc_id bigint")
-            cc_local = [(int(r["src"]), int(r["dst"])) for r in rel_rows
-                        if r["jaccard"] >= cfg.cc_threshold]
-            new_cc_edges = spark.createDataFrame(
-                cc_local, "src bigint, dst bigint") if cc_local else \
-                spark.createDataFrame([], "src bigint, dst bigint")
-        else:
-            affected_local = None
-            affected = (
-                rel_active.select(F.col("src").alias("doc_id"))
-                .unionByName(rel_active.select(F.col("dst").alias("doc_id")))
-                .unionByName(new_ids)
-                .distinct()
-            )
-            new_cc_edges = rel_active.filter(
-                F.col("jaccard") >= cfg.cc_threshold).select("src", "dst")
-        new_ids_arg = new_ids
-    touched, finalize = _finalize_bookkeeping(
-        fd, n_appended_pairs=int(n_pairs), affected=affected,
-        new_cc_edges=new_cc_edges, new_ids=new_ids_arg,
-        n_edges_hint=int(n_rel), affected_local=affected_local,
-        new_ids_local=new_ids_local, mem_bloom=mem_bloom,
-        committed_ids_local=committed_ids, _timings=_timings, _t0=_t0)
+        _LOG.info("incremental: stale extracted marker — the rebuild heals "
+                  "the crashed batch's derived tables")
+    n_valid = _finalize_bookkeeping(
+        fd, mem_bloom=mem_bloom, committed_ids_local=committed_ids,
+        _timings=_timings, _t0=_t0)
+    # A heal cannot tell what the crashed finalize left stale: the corpus.
+    touched = n_valid if marker_stale else touched_fut.result()
     _mark("finalize")
 
     hwm_out = _footer_hwm(fd)
@@ -722,17 +660,12 @@ def incremental_update(fd, new_pages: DataFrame,
     # which ingest path ran — observability for operators and tests:
     # "clean" = zero idempotency anti-joins (footer tripwire), "replay" =
     # batch-scoped repair of a crashed history, "full_rebuild" = stale
-    # marker forced the derived tables to rebuild from scratch; `finalize`
-    # says which derived-table branch ran ("scoped" | "rebuild")
+    # marker: the finalize heals a crashed batch's derived tables
     path = ("full_rebuild" if marker_stale
             else "clean" if clean_history else "replay")
     return {"new_docs": int(n_new), "new_pairs": int(n_pairs),
-            "touched_docs": touched, "path": path, "finalize": finalize,
+            "touched_docs": int(touched), "path": path,
             "hwm": str(hwm_out), "phase_completed_s": _timings}
-
-
-def _semi(df: DataFrame, ids: DataFrame, col: str) -> DataFrame:
-    return df.join(ids.withColumnRenamed("doc_id", col), col, "left_semi")
 
 
 def _touching(pairs: DataFrame, ids: DataFrame) -> DataFrame:
@@ -777,76 +710,29 @@ def _shard_of(label: int, n_shards: int) -> int:
     return int(label % n_shards)
 
 
-def _label_merge_map(src: np.ndarray, dst: np.ndarray) -> dict[int, int]:
-    """Contraction merge map over component-label edges (int64 arrays):
-    {old_label -> new_label} for every label that changes (identity
-    omitted). The new label is the MIN of its merged set — exactly the
-    min-doc_id label a from-scratch resolve would produce."""
-    labels, roots = _min_roots(src, dst)
-    moved = labels != roots
-    return dict(zip(labels[moved].tolist(), roots[moved].tolist()))
-
-
-def _scoped_can_skip(aff_shards: list[int], n_shards: int) -> bool:
-    """The finalize gate. The scoped read-merge-overwrite can only beat
-    run()'s writers by leaving shards untouched: once the affected set
-    spans every shard it skips none and still runs many more small Spark
-    jobs than the full rebuild over the whole pair table. A function of its
-    own so tests can hold it open and cover the scoped branch on small
-    stores."""
-    return len(aff_shards) < n_shards
-
-
-def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
-                          affected: DataFrame | None = None,
-                          new_cc_edges: DataFrame | None = None,
-                          new_ids: DataFrame | None = None,
-                          n_edges_hint: int | None = None,
-                          affected_local: list | None = None,
-                          new_ids_local: list | None = None,
-                          mem_bloom=None,
+def _finalize_bookkeeping(fd, mem_bloom=None,
                           committed_ids_local: list | None = None,
                           _timings: dict | None = None,
-                          _t0: float | None = None) -> tuple[int, str]:
+                          _t0: float | None = None) -> int:
     """Post-append bookkeeping: counts, markers, derived tables, manifest.
 
     extract_counts is DERIVED from the extracted table's parquet footers
     (ground truth) rather than incremented, so a replay healing a crashed
     batch recounts correctly instead of compounding the drift.
 
-    ``affected`` (doc_ids incident to the batch's pairs, plus the new docs)
-    scopes the knn/best_nn re-derivation to the touched neighborhood:
-    unaffected docs' edge sets are unchanged by construction (every new
-    edge's BOTH endpoints are in the affected set), so their rows carry
-    over. CC resolves by component-graph contraction over ``new_cc_edges``
-    (exact — edge insertion is monotone); ``new_ids`` (the docs committing
-    in this batch) seeds their singleton assignment rows without scanning
-    the assignments table. run()'s own derived-table writers
-    (plans/pipeline.py derived_table_writers) recompute everything over the
-    ghost-free pairs instead when ``affected=None`` — the crash-heal path,
-    or a work dir whose derived tables predate the current shard layout —
-    and when the affected set spans every shard, where scoping could skip
-    no shard (the gate below).
-
-    Scoped-branch WRITES are shard-scoped (round-3 verdict item #1): the
-    five derived tables are hash-bucketed by pmod(id, n_shards) and a batch
-    rewrites ONLY the shards containing changed rows via dynamic partition
-    overwrite — the parquet-native equivalent of Iceberg MERGE INTO. The
-    carried-over rows of untouched shards are never read or rewritten, so
-    per-batch write volume is O(touched-shard data), not O(corpus).
-    outliers/component_info contents can also SHRINK (an outlier displaced
-    by the moving percentile cut; a component label merged away) — their
-    scope comes from an old-vs-new diff and emptied shards are deleted.
-    The three independent table groups (knn | best_nn→outliers |
-    assignments→component_info) update from concurrent driver threads,
-    on either branch.
+    The five derived tables are rebuilt by run()'s own writers
+    (plans/pipeline.py derived_table_writers) over the ghost-free pair
+    tables; their three independent groups (knn | best_nn→outliers |
+    assignments→component_info) run from concurrent driver threads. The
+    rebuild depends only on what is committed, so one call finalizes a
+    clean batch, a crash replay and the heal of a crashed finalize alike,
+    and always writes the store's current shard layout.
 
     The `extracted` marker refreshes LAST: if a crash interrupts the
     derived-table writes, the stale marker keeps tripping the
     rows-vs-footers heal check at the start of every later update.
 
-    Returns ``(touched_docs, finalize)``: the affected-set size (total
-    docs on the heal path) and which branch ran, "scoped" or "rebuild".
+    Returns the number of valid committed docs.
     """
     spark = fd.spark
     store = fd.store
@@ -873,19 +759,14 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
         store.refresh_marker(stage, fd._chash)
     _mark("fin_markers")
 
-    from fastdup_spark.operators.knn import knn_truncate
-    from fastdup_spark.operators.outliers import best_neighbor, outliers_by_percentile
     scored_all = store.read(spark, "pairs_scored")
     sim_all = store.read(spark, "similarity")
-    n_sh = fd.n_shards
-
     # ghost quarantine (module docstring): docs holding signatures but not
     # committed to `extracted` — a crashed, not-yet-redelivered batch.
     # Their pairs are invisible to every derived table until the doc
-    # commits, on the full path exactly as on the scoped one. The common
-    # no-ghost case is decided from footers alone (|signatures| ==
-    # |valid extracted| — same invariant as the update-start tripwire);
-    # only a count mismatch pays the exact anti-join.
+    # commits. The common no-ghost case is decided from footers alone
+    # (|signatures| == |valid extracted| — same invariant as the
+    # update-start tripwire); only a count mismatch pays the exact anti-join.
     if store.footer_rows("signatures") != counts["valid"]:
         ghosts = (store.read(spark, "signatures").select("doc_id")
                   .join(store.read(spark, "extracted").select("doc_id"),
@@ -893,248 +774,7 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
         if ghosts.head(1):
             scored_all = _no_ghost(scored_all, ghosts)
             sim_all = _no_ghost(sim_all, ghosts)
-
-    def _layout_ok(stage: str) -> bool:
-        # scoped dynamic-overwrite needs the marker's shard params to match
-        # the current layout. An EMPTY-but-marked table (flat zero-row
-        # fallback file) still qualifies: overwrite_shards replaces the
-        # flat file with shard dirs wholesale, so e.g. a knn table with
-        # zero similarity edges no longer forces O(corpus) rebuilds on
-        # every later batch (round-4 ADVICE, low).
-        p = store.shard_params(stage)
-        return p is not None and p[1] == n_sh
-
-    if affected is not None and (new_cc_edges is None or new_ids is None
-                                 or not all(
-            _layout_ok(s) for s in ("knn", "best_nn", "assignments",
-                                    "component_info", "outliers"))):
-        _LOG.info("incremental: derived-table shard layout predates "
-                  "n_shards=%d — taking the full-rebuild path", n_sh)
-        affected = None  # pre-shard-layout work dir: full rebuild heals it
-
-    if affected is None:
-        # crash heal / layout mismatch: no scope, the whole corpus is touched
-        touched, aff_shards = counts["valid"], None
-    elif affected_local is not None:
-        # the affected set is already a driver-side literal frame —
-        # touched count and shard list come from pure Python, skipping
-        # the pin job and the shard-histogram job
-        aff = affected
-        touched = len(affected_local)
-        aff_shards = sorted({_shard_of(i, n_sh) for i in affected_local})
-    else:
-        aff = affected.localCheckpoint(eager=True)
-        # shard histogram of the affected set: ONE tiny job yields both
-        # the touched-doc count and the touched-shard list
-        srows = aff.groupBy(shard_expr("doc_id", n_sh).alias("s")) \
-            .agg(F.count("*").alias("c")).collect()
-        touched = int(sum(r["c"] for r in srows))
-        aff_shards = sorted(r["s"] for r in srows)
-    # decided before the aff_pairs pin, which the rebuild does not need
-    scoped = aff_shards is not None and _scoped_can_skip(aff_shards, n_sh)
-    finalize = "scoped" if scoped else "rebuild"
-    _LOG.debug("incremental: %s finalize — %d touched docs in %s of %d "
-               "shards", finalize, touched,
-               "all" if aff_shards is None else len(aff_shards), n_sh)
-
-    if scoped:
-        # ONE column-pruned pass over the pair table serves knn AND best_nn:
-        # every pair touching an affected doc (broadcast semi, no shuffle).
-        # The similarity table is by construction scored_all filtered at
-        # cfg.threshold, so the knn input derives from the same frame.
-        aff_pairs = _semi(scored_all, aff, "src") \
-            .unionByName(_semi(scored_all, aff, "dst")) \
-            .dropDuplicates(["src", "dst"]) \
-            .localCheckpoint(eager=True)
-
-        def _upd_knn():
-            # fresh rows for affected docs; carried rows ONLY from the
-            # affected shards (partition-pruned scan), other shards untouched
-            aff_sim = aff_pairs.filter(F.col("jaccard") >= cfg.threshold)
-            knn_aff = knn_truncate(aff_sim, cfg.knn_k) \
-                .join(aff, "doc_id", "left_semi")
-            knn_carry = store.read(spark, "knn", keep_shard=True) \
-                .filter(F.col(SHARD_COL).isin(aff_shards)).drop(SHARD_COL) \
-                .join(aff, "doc_id", "left_anti")
-            store.overwrite_shards(knn_carry.unionByName(knn_aff), "knn",
-                                   fd._chash, aff_shards)
-
-        def _upd_best_nn_outliers():
-            # best_nn: one row per affected doc (aff IS the doc set — no
-            # docs-table scan); never shrinks
-            bn_aff = best_neighbor(aff, aff_pairs, sim_col="jaccard")
-            bn_carry = store.read(spark, "best_nn", keep_shard=True) \
-                .filter(F.col(SHARD_COL).isin(aff_shards)).drop(SHARD_COL) \
-                .join(aff, "doc_id", "left_anti")
-            store.overwrite_shards(bn_carry.unionByName(bn_aff), "best_nn",
-                                   fd._chash, aff_shards,
-                                   sort_within=["best_sim"])
-
-            # outliers: the percentile cut is GLOBAL (it moves with every
-            # batch), so membership is recomputed from the updated best_nn —
-            # but the previous batch's realized cutoff (marker counter)
-            # prunes the scan to ~k rows via a pushed row-group-skipping
-            # predicate (percentile fallback when the cut moved past it),
-            # and the write touches only shards where membership or content
-            # changed (old-vs-new doc_id diff ∪ affected docs)
-            hint = (store.read_marker("outliers") or {}) \
-                .get("counters", {}).get("cutoff")
-            rank_stats: dict = {}
-            out_new = outliers_by_percentile(
-                store.read(spark, "best_nn"), cfg.outlier_pct,
-                n=counts["valid"],
-                cutoff_hint=hint, stats=rank_stats).localCheckpoint(eager=True)
-            old_out_ids = store.read(spark, "outliers").select("doc_id")
-            sym_diff = old_out_ids.join(out_new.select("doc_id"),
-                                        "doc_id", "left_anti") \
-                .unionByName(out_new.select("doc_id")
-                             .join(old_out_ids, "doc_id", "left_anti"))
-            out_shards = sorted(set(aff_shards)
-                                | set(_shards_of(sym_diff, n_sh)))
-            store.overwrite_shards(
-                out_new.filter(shard_expr("doc_id", n_sh).isin(out_shards)),
-                "outliers", fd._chash, out_shards)
-            _record_outlier_cutoff(fd, extra={
-                "rank_path": rank_stats.get("path")})
-
-        # shard set of the batch's new docs — pure Python when the ids are
-        # already on the driver, else one collect shared by both uses below
-        _nid_shards_memo: list = []
-
-        def _new_id_shards() -> list[int]:
-            if not _nid_shards_memo:
-                _nid_shards_memo.append(
-                    sorted({_shard_of(i, n_sh) for i in new_ids_local})
-                    if new_ids_local is not None
-                    else _shards_of(new_ids, n_sh))
-            return _nid_shards_memo[0]
-
-        def _upd_components():
-            # --- assignments: CC by contraction (exact — see module
-            # docstring). The component-label edge list is batch-bounded;
-            # resolve it with cc's driver-side vectorized union-find (zero
-            # iterative Spark jobs) unless a bulk backfill overflows cc's
-            # driver-edge gate, where the distributed large-star/small-star
-            # job takes over.
-            # The label lookup scans ONLY the shards holding the edges'
-            # endpoints (endpoints ⊆ affected ⊆ aff_shards).
-            lab = (store.read(spark, "assignments", keep_shard=True)
-                   .filter(F.col(SHARD_COL).isin(aff_shards)).drop(SHARD_COL)
-                   .join(F.broadcast(aff), "doc_id", "left_semi"))
-            comp_edges = (
-                new_cc_edges
-                .join(F.broadcast(lab.select(F.col("doc_id").alias("src"),
-                                             F.col("component_id").alias("ca"))),
-                      "src", "left")
-                .join(F.broadcast(lab.select(F.col("doc_id").alias("dst"),
-                                             F.col("component_id").alias("cb"))),
-                      "dst", "left")
-                .select(F.coalesce("ca", F.col("src")).alias("src"),
-                        F.coalesce("cb", F.col("dst")).alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-            )
-            if n_edges_hint is not None and n_edges_hint <= _CC_DRIVER_EDGES_MAX:
-                pdf = comp_edges.toPandas()
-                merge_map = _label_merge_map(
-                    pdf["src"].to_numpy(dtype=np.int64),
-                    pdf["dst"].to_numpy(dtype=np.int64))
-            else:
-                # distributed resolve, then collect the (broadcast-sized)
-                # merge map — identity rows dropped as below
-                merge_map = {
-                    r["doc_id"]: r["component_id"]
-                    for r in connected_components(comp_edges).collect()
-                    if r["doc_id"] != r["component_id"]}
-            # identity mappings are absent from merge_map: those docs keep
-            # their label, and keeping them would rewrite every shard of a
-            # large surviving component on every batch that brushes it.
-            new_doc_rows = new_ids.select(
-                "doc_id", F.col("doc_id").alias("component_id"))
-            if merge_map:
-                mm_df = spark.createDataFrame(
-                    list(merge_map.items()),
-                    "component_id bigint, _new_comp bigint")
-                changed_docs = store.read(spark, "assignments") \
-                    .join(F.broadcast(mm_df.select("component_id")),
-                          "component_id", "left_semi").select("doc_id") \
-                    .unionByName(new_ids)
-                asg_shards = _shards_of(changed_docs, n_sh)
-                asg_part = (
-                    store.read(spark, "assignments", keep_shard=True)
-                    .filter(F.col(SHARD_COL).isin(asg_shards)).drop(SHARD_COL)
-                    .unionByName(new_doc_rows)
-                    .join(F.broadcast(mm_df), "component_id", "left")
-                    .select("doc_id",
-                            F.coalesce("_new_comp", F.col("component_id"))
-                            .alias("component_id"))
-                )
-            else:
-                # no merges: only the new docs' singleton rows change —
-                # ZERO assignments-table scans
-                asg_shards = _new_id_shards()
-                asg_part = (
-                    store.read(spark, "assignments", keep_shard=True)
-                    .filter(F.col(SHARD_COL).isin(asg_shards)).drop(SHARD_COL)
-                    .unionByName(new_doc_rows)
-                )
-            store.overwrite_shards(asg_part, "assignments", fd._chash,
-                                   asg_shards)
-
-            # --- component_info: DRIVER-SIDE count-merge. Counts are
-            # additive under contraction: each surviving label's new count
-            # = its old count + Σ old counts of the labels it absorbed; a
-            # label absent from the old table is a new doc's singleton
-            # (count 1). One shard-pruned collect of the referenced labels'
-            # old counts feeds pure-Python arithmetic — neither assignments
-            # nor component_info is scanned.
-            refs = sorted(set(merge_map) | set(merge_map.values()))
-            if refs:
-                refs_df = spark.createDataFrame(
-                    [(r,) for r in refs], "component_id bigint")
-                ref_shards = sorted({_shard_of(r, n_sh) for r in refs})
-                old_cnt = {
-                    r["component_id"]: r["count"]
-                    for r in (store.read(spark, "component_info",
-                                         keep_shard=True)
-                              .filter(F.col(SHARD_COL).isin(ref_shards))
-                              .drop(SHARD_COL)
-                              .join(F.broadcast(refs_df), "component_id",
-                                    "left_semi")).collect()}
-                base = {r: int(old_cnt.get(r, 1)) for r in refs}
-                target: dict[int, int] = {
-                    v: base[v] for v in set(merge_map.values())}
-                for k, v in merge_map.items():
-                    target[v] += base[k]
-                target_df = spark.createDataFrame(
-                    list(target.items()), "component_id bigint, count bigint")
-                singles = new_ids.join(F.broadcast(refs_df.withColumnRenamed(
-                    "component_id", "doc_id")), "doc_id", "left_anti") \
-                    .select(F.col("doc_id").alias("component_id"),
-                            F.lit(1).cast("long").alias("count"))
-                cid_shards = sorted(set(ref_shards) | set(_new_id_shards()))
-                keep_old = (
-                    store.read(spark, "component_info", keep_shard=True)
-                    .filter(F.col(SHARD_COL).isin(cid_shards)).drop(SHARD_COL)
-                    .join(F.broadcast(refs_df), "component_id", "left_anti")
-                )
-                info_part = keep_old.unionByName(target_df).unionByName(singles)
-            else:
-                # no merges: every new doc becomes a count-1 singleton
-                cid_shards = _new_id_shards()
-                info_part = (
-                    store.read(spark, "component_info", keep_shard=True)
-                    .filter(F.col(SHARD_COL).isin(cid_shards)).drop(SHARD_COL)
-                    .unionByName(new_ids.select(
-                        F.col("doc_id").alias("component_id"),
-                        F.lit(1).cast("long").alias("count")))
-                )
-            store.overwrite_shards(info_part, "component_info", fd._chash,
-                                   cid_shards)
-
-        writers = (_upd_knn, _upd_best_nn_outliers, _upd_components)
-    else:
-        # the same writers run()'s tail uses, over the ghost-free pair set
-        writers = derived_table_writers(fd, fd.docs(), scored_all, sim_all)
+    writers = derived_table_writers(fd, fd.docs(), scored_all, sim_all)
     _mark("fin_scope")
 
     from concurrent.futures import ThreadPoolExecutor
@@ -1174,4 +814,4 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
 
     # LAST: the heal tripwire (see docstring)
     store.refresh_marker("extracted", fd._chash)
-    return int(touched), finalize
+    return counts["valid"]

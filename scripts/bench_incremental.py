@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Incremental-update bench: quantify the shard-scoped write win.
+"""Incremental-update bench: what an update costs against a full rerun.
 
 Runs the pipeline on the first 90% of the bench corpus, then times
-`fd.update()` of the remaining 10% — reporting update seconds, touched docs,
-and how many shards of each derived table were actually rewritten — and
-compares against a from-scratch run over the full corpus. Appends the block
-to BENCH/BASELINE.md. Usage:
+`fd.update()` of the remaining 10% and of a 50-doc trickle batch —
+reporting update seconds, touched docs, and how many shards of each derived
+table were rewritten — and compares against a from-scratch run over the
+full corpus. Appends the block to BENCH/BASELINE.md. Usage:
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/bench_incremental.py
 """
@@ -70,8 +70,7 @@ def main() -> None:
                            if before[s].get(k) != after[s].get(k))
 
     # tiny trickle batch (50 modified replicas of existing singleton-ish
-    # pages): the regime where shard scoping shows — a handful of shards
-    # rewritten out of store_shards
+    # pages): the steady streaming state
     tiny = (
         pages.orderBy("url").limit(50)
         .withColumn("url", F.concat(F.col("url"), F.lit("?trickle=1")))
@@ -87,26 +86,6 @@ def main() -> None:
         keys = set(before_t[s]) | set(after_t[s])
         rewritten_t[s] = sum(1 for k in keys
                              if before_t[s].get(k) != after_t[s].get(k))
-
-    # same trickle at production-style shard count (1024): rewritten shard
-    # count collapses to ~|touched| — write volume is O(touched), not
-    # O(corpus); the default 32 is sized for this sandbox's table sizes
-    from fastdup_spark import PipelineConfig
-    work_hs = "/tmp/fd_bench_incr_hs"
-    shutil.rmtree(work_hs, ignore_errors=True)
-    fd_hs = FastdupSpark(spark, work_hs, PipelineConfig(store_shards=1024))
-    fd_hs.run(base, force=True)
-    fd_hs.update(batch)
-    before_h = {s: files_by_shard(fd_hs.store, s) for s in stages}
-    t0 = time.time()
-    stats_h = fd_hs.update(tiny)
-    t_tiny_hs = round(time.time() - t0, 2)
-    after_h = {s: files_by_shard(fd_hs.store, s) for s in stages}
-    rewritten_h = {}
-    for s in stages:
-        keys = set(before_h[s]) | set(after_h[s])
-        rewritten_h[s] = sum(1 for k in keys
-                             if before_h[s].get(k) != after_h[s].get(k))
 
     # from-scratch comparison over the identical full corpus
     work2 = "/tmp/fd_bench_incr_full"
@@ -124,17 +103,10 @@ def main() -> None:
         f"-> update = {t_update / t_full:.2f}x of a full rerun",
         f"10%-batch derived-table shards rewritten (of {total_shards}): "
         + ", ".join(f"{s}={rewritten[s]}" for s in stages)
-        + " (a 10k-doc batch hashes into every shard — write volume is "
-          "bounded by touched shards, which here is all of them)",
+        + " (the finalize rebuilds every derived table)",
         f"50-doc trickle batch: {t_tiny}s, touched {stats_t['touched_docs']}"
         f" docs; shards rewritten (of {total_shards}): "
-        + ", ".join(f"{s}={rewritten_t[s]}" for s in stages)
-        + " — uniform hashing: |touched| docs cover ~N(1-(1-1/N)^|touched|)"
-          " of N shards, so small N saturates",
-        f"same trickle at store_shards=1024: {t_tiny_hs}s, touched "
-        f"{stats_h['touched_docs']} docs; shards rewritten (of 1024): "
-        + ", ".join(f"{s}={rewritten_h[s]}" for s in stages)
-        + " — write volume is O(touched docs), not O(corpus)",
+        + ", ".join(f"{s}={rewritten_t[s]}" for s in stages),
     ]
     for ln in lines:
         print(ln)

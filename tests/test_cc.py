@@ -129,3 +129,32 @@ def test_string_ids_take_star_rounds(spark):
     got = {r["doc_id"]: r["component_id"]
            for r in connected_components(e).collect()}
     assert got == _oracle(edges)
+
+
+def test_min_roots():
+    """The driver union-find every CC run resolves small graphs with: every
+    vertex, sorted, with the min vertex of its component as root — chains
+    collapsed, self-loops merging nothing, signed 64-bit (xxhash64-style)
+    ids."""
+    from fastdup_spark.operators.cc import _min_roots
+
+    def roots(src, dst):
+        labels, r = _min_roots(src, dst)
+        assert labels.tolist() == sorted(labels.tolist())
+        return dict(zip(labels.tolist(), r.tolist()))
+
+    neg = -6_917_529_027_641_081_856
+    # chain 12-7-9-5 joined to a negative id; a separate pair; a self-loop
+    src = np.array([12, 7, 9, 5, 4, 100], dtype=np.int64)
+    dst = np.array([7, 9, 5, neg, 3, 100], dtype=np.int64)
+    assert roots(src, dst) == {12: neg, 9: neg, 7: neg, 5: neg, neg: neg,
+                               4: 3, 3: 3, 100: 100}
+    assert roots(np.array([], dtype=np.int64),
+                 np.array([], dtype=np.int64)) == {}
+
+    rng = np.random.default_rng(5)
+    for _ in range(50):
+        ids = rng.integers(-2**63, 2**63 - 1, size=40, dtype=np.int64)
+        e = rng.choice(ids, size=(30, 2))
+        edges = [(int(a), int(b)) for a, b in e]
+        assert roots(e[:, 0].copy(), e[:, 1].copy()) == _oracle(edges)

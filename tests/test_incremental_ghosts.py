@@ -7,9 +7,9 @@
    corpus — and a still-later redelivery must apply the deferred pairs so
    the final state matches a fresh run over everything.
 2. Empty-but-marked derived tables (low): a corpus with zero similarity
-   edges writes knn/outliers as flat zero-row fallback files; later batches
-   must still take the scoped path (touched == batch-neighborhood, not the
-   corpus).
+   edges writes knn/outliers as flat zero-row fallback files; a later batch
+   still reports only its neighbourhood as touched (not the corpus) and
+   rebuilds those tables out of the fallback layout.
 3. Scoped pair reads (round-4 verdict #1): the candidate/similarity/
    containment anti-joins must carry batch-scoped (left-semi) inputs on
    BOTH sides — asserted on the optimized plans.
@@ -69,7 +69,8 @@ def test_ghost_batch_not_redelivered_defers_cleanly(
     stats = fd.update(new2)  # different batch; new1 is NOT redelivered
     assert stats["new_docs"] > 0
     assert stats["path"] == "replay"  # ghosts present -> scoped repair path
-    # scoped path engaged (a ghost must not force the full rebuild)
+    # a ghost does not turn the update into a heal: touched is the batch's
+    # neighbourhood, not the corpus
     assert 0 < stats["touched_docs"] < fd.docs().count()
 
     ghost_ids = {r["doc_id"] for r in
@@ -138,10 +139,11 @@ def test_empty_derived_tables_keep_scoped_path(spark, tmp_path):
     assert fd.store.read(spark, "outliers").count() == 0
 
     stats = fd.update(_unique_pages(spark, 12, start=100))
-    # ADVICE (low): empty-but-marked tables must NOT force the full path
+    # ADVICE (low): empty-but-marked tables do not turn the update into a
+    # heal
     assert stats["path"] == "clean"
     assert stats["touched_docs"] == 12, \
-        "empty derived table downgraded the update to a full rebuild"
+        "empty derived table made the update report the corpus as touched"
 
     fd_full = FastdupSpark(spark, str(tmp_path / "empty_full"))
     fd_full.run(_unique_pages(spark, 12).unionByName(
@@ -153,8 +155,8 @@ def test_empty_derived_tables_keep_scoped_path(spark, tmp_path):
                         ("outliers", ("doc_id", "best_sim", "best_nn"))):
         assert _table_set(fd, spark, stage, cols) == \
             _table_set(fd_full, spark, stage, cols), stage
-    # outliers transitioned empty -> 1 row (floor(0.05*24)=1) through the
-    # flat-fallback replacement in overwrite_shards
+    # outliers transitioned empty -> 1 row (floor(0.05*24)=1), replacing
+    # the flat zero-row fallback layout
     assert fd.store.read(spark, "outliers").count() == 1
 
 

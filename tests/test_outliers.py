@@ -145,26 +145,6 @@ def test_rank_property_random_distributions(spark):
     check()
 
 
-def test_cutoff_hint_matches_percentile_path(spark):
-    """A cutoff_hint (previous batch's realized cutoff) must produce the
-    exact same bottom-k as the percentile path — over-pruning slack is
-    fine, under-pruning falls back."""
-    rows = [(i, float((i * 37) % 100) / 100.0) for i in range(500)]
-    df = spark.createDataFrame(rows, "doc_id long, best_sim double")
-    want = {(r["doc_id"], r["best_sim"]) for r in exact_rank_head(
-        df, 25, 500, "best_sim", "doc_id", ascending=True).collect()}
-    # generous hint (over-prunes mildly): same result, no percentile job
-    got_hi = {(r["doc_id"], r["best_sim"]) for r in exact_rank_head(
-        df, 25, 500, "best_sim", "doc_id", ascending=True,
-        cutoff_hint=0.2).collect()}
-    # stale low hint (under-prunes): must FALL BACK, still exact
-    got_lo = {(r["doc_id"], r["best_sim"]) for r in exact_rank_head(
-        df, 25, 500, "best_sim", "doc_id", ascending=True,
-        cutoff_hint=0.001).collect()}
-    assert got_hi == want
-    assert got_lo == want
-
-
 def test_outlier_marker_carries_cutoff(fd):
     m = fd.store.read_marker("outliers")
     c = m["counters"].get("cutoff")
