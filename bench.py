@@ -167,22 +167,11 @@ def main() -> None:
 
     # incremental-update measurement (round-4 verdict #9, round-5 #3): two
     # batch sizes into the LAST trial's completed work dir — a 100-doc
-    # TRICKLE (the streaming-update shape the scoped path is built for) and
-    # the historical ~1% batch. Each reports update wall time, touched
-    # docs, and how many shards of each derived table actually rewrote
-    # (the shard-scoped write contract, deterministic evidence).
+    # TRICKLE (the streaming-update shape) and the historical ~1% batch.
+    # Each reports update wall time and touched docs.
     incremental = incremental_trickle = None
     if os.environ.get("BENCH_INCREMENTAL", "1") != "0":
         from pyspark.sql import functions as F
-        stages5 = ["knn", "best_nn", "assignments", "component_info",
-                   "outliers"]
-
-        def _shard_files(store, stage):
-            out: dict[str, set] = {}
-            for x in store._parquet_lineage(store.table_path(stage)):
-                shard, _, fn = x["file"].partition(os.sep)
-                out.setdefault(shard, set()).add((fn, x["rows"]))
-            return out
 
         def _measure_update(n_batch: int, tag: str) -> dict:
             batch = (
@@ -191,11 +180,9 @@ def main() -> None:
                 .withColumn("warc_ts",
                             F.col("warc_ts") + F.expr("interval 90 days"))
             )
-            before = {s: _shard_files(fd.store, s) for s in stages5}
             t0 = time.time()
             st = fd.update(batch)
             t_upd = round(time.time() - t0, 3)
-            after = {s: _shard_files(fd.store, s) for s in stages5}
             return {
                 "batch_docs": int(st["new_docs"]),
                 "update_sec": t_upd,
@@ -203,10 +190,6 @@ def main() -> None:
                 "new_pairs": int(st["new_pairs"]),
                 "phase_completed_s": st.get("phase_completed_s"),
                 "store_shards": fd.n_shards,
-                "shards_rewritten": {
-                    s: sum(1 for k in set(before[s]) | set(after[s])
-                           if before[s].get(k) != after[s].get(k))
-                    for s in stages5},
             }
 
         # min-of-2 for the trickle (CLAUDE.md noise rule: never single-trial
@@ -359,9 +342,7 @@ def main() -> None:
                 if blk:
                     f.write(f"- {lbl}: {blk['update_sec']}s "
                             f"for {blk['batch_docs']} docs "
-                            f"(touched {blk['touched_docs']}, "
-                            f"shards rewritten of {blk['store_shards']}: "
-                            f"{blk['shards_rewritten']})\n")
+                            f"(touched {blk['touched_docs']})\n")
             if cascade:
                 f.write(f"- dedup cascade (url->exact->near_dup): "
                         f"{cascade['sec']}s, dropped "

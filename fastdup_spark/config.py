@@ -59,12 +59,11 @@ class PipelineConfig:
     # --- execution ---
     num_partitions: int | None = None  # None -> leave to AQE / input splits
     resume: bool = True                # skip stages with completed markers
-    # hash-bucket count for the doc-keyed stage tables (extracted /
-    # signatures and the derived knn / best_nn / assignments /
-    # component_info / outliers): an incremental update's scans of
-    # `extracted` and `signatures` (membership, idempotency, verify, LCS
-    # text) read only the buckets holding the batch's ids (partition-pruned
-    # scans ≈ Iceberg bucket(N, doc_id)). None (default) auto-scales at the
+    # hash-bucket count for the base tables `extracted` and `signatures`
+    # (the derived tables are flat): an incremental update's scans of them
+    # (membership, idempotency, verify, LCS text) read only the buckets
+    # holding the batch's ids (partition-pruned scans ≈ Iceberg
+    # bucket(N, doc_id)). None (default) auto-scales at the
     # first run(): ~25k docs per shard, never fewer than one shard per core
     # (capped at 32) — see resolve_store_shards — and the resolved value
     # persists in the work dir (store_layout.json) so later runs and

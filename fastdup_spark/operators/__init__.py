@@ -15,7 +15,7 @@ from fastdup_spark.operators.labels import (
     expand_with_annotations, label_score, top_k_label,
 )
 from fastdup_spark.operators.lsh import (
-    band_buckets, bucket_stats, candidate_pairs, lsh_candidates, salt_buckets,
+    band_buckets, bucket_stats, candidate_pairs, salt_buckets,
 )
 from fastdup_spark.operators.outliers import (
     best_neighbor, exact_rank_head, outliers_by_percentile,
@@ -47,8 +47,8 @@ __all__ = [
     "classification_report", "diff_label_pairs", "enrich_pairs_with_labels",
     "expand_with_annotations", "label_score", "top_k_label",
     "kmeans_fit",
-    "band_buckets", "bucket_stats", "candidate_pairs", "lsh_candidates",
-    "salt_buckets", "best_neighbor", "exact_rank_head", "outliers_by_percentile",
+    "band_buckets", "bucket_stats", "candidate_pairs", "salt_buckets",
+    "best_neighbor", "exact_rank_head", "outliers_by_percentile",
     "pagerank", "passage_chunks", "remove_repeated_passages",
     "simhash_blocks", "simhash_near_dup",
     "doc_stats", "summary_stats", "content_fingerprint_expr", "lang_id_expr",

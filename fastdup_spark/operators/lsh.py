@@ -135,17 +135,6 @@ def candidate_pairs(salted_buckets: DataFrame,
     )
 
 
-def lsh_candidates(sig_df: DataFrame, bands: int, rows: int,
-                   max_bucket_size: int = 5000, salt_target: int = 500,
-                   id_col: str = "doc_id", sig_col: str = "minhash",
-                   ) -> tuple[DataFrame, DataFrame]:
-    """Full candidate-generation stage. Returns (candidates, bucket_stats)."""
-    buckets = band_buckets(sig_df, bands, rows, id_col=id_col, sig_col=sig_col)
-    stats = bucket_stats(buckets)
-    salted = salt_buckets(buckets, stats, max_bucket_size, salt_target)
-    return candidate_pairs(salted), stats
-
-
 # --------------------------------------------------------------------------
 # banding-parameter auto-tuner (driver-side math, no Spark)
 # --------------------------------------------------------------------------

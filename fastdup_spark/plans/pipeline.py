@@ -108,8 +108,9 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
 
     ``docs`` (doc_id, ...) gives every doc a best_nn row and a singleton
     component; ``scored`` is pairs_scored; ``sim`` its >= threshold edges.
-    ``done(stage)`` skips stages already complete under resume. Every
-    table is hash-sharded by pmod(id, fd.n_shards)."""
+    ``done(stage)`` skips stages already complete under resume. The
+    tables are written flat: no reader prunes them by doc id, and every
+    update rewrites them whole."""
     cfg, store, chash = fd.config, fd.store, fd._chash
 
     def knn():
@@ -118,22 +119,21 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
         # table to <= k rows/doc even when a giant dup clique makes the
         # full edge set quadratic in clique size
         if not done("knn"):
-            store.write_sharded(knn_truncate(sim, cfg.knn_k), "knn", chash,
-                                fd.n_shards, counters={"k": cfg.knn_k})
+            store.write(knn_truncate(sim, cfg.knn_k), "knn", chash,
+                        counters={"k": cfg.knn_k})
 
     def best_nn_outliers():
         # (ref: bottom 5% NN distance)
         if not done("best_nn"):
             bn = best_neighbor(docs, scored, sim_col="jaccard")
-            # shard files sorted by best_sim: the outlier cut's pushed
-            # range predicate skips row groups
-            store.write_sharded(bn, "best_nn", chash, fd.n_shards,
-                                sort_within=["best_sim"])
+            # files sorted by best_sim: the outlier cut's pushed range
+            # predicate skips row groups
+            store.write(bn.sortWithinPartitions("best_sim"), "best_nn", chash)
         if not done("outliers"):
             n_docs = (store.read_json("extract_counts") or {}).get("valid")
             out = outliers_by_percentile(store.read(fd.spark, "best_nn"),
                                          cfg.outlier_pct, n=n_docs)
-            store.write_sharded(out, "outliers", chash, fd.n_shards)
+            store.write(out, "outliers", chash)
             _record_outlier_cutoff(fd)
 
     def components():
@@ -142,12 +142,11 @@ def derived_table_writers(fd, docs: DataFrame, scored: DataFrame,
             edges = scored.filter(F.col("jaccard") >= cfg.cc_threshold) \
                           .select("src", "dst")
             asg = connected_components(edges, vertices=docs.select("doc_id"))
-            store.write_sharded(asg, "assignments", chash, fd.n_shards)
+            store.write(asg, "assignments", chash)
         if not done("component_info"):
             info = store.read(fd.spark, "assignments").groupBy(
                 "component_id").agg(F.count("*").alias("count"))
-            store.write_sharded(info, "component_info", chash, fd.n_shards,
-                                id_col="component_id")
+            store.write(info, "component_info", chash)
 
     return knn, best_nn_outliers, components
 
@@ -239,21 +238,18 @@ class FastdupSpark:
 
     @property
     def n_shards(self) -> int:
-        """Hash-bucket count for the doc-keyed stage tables. Resolution
-        order: explicit config -> persisted layout (store_layout.json,
-        written at the first run so later updates keep the layout) ->
-        legacy marker params -> auto from the extracted corpus size."""
+        """Hash-bucket count for the base tables (`extracted`,
+        `signatures`). Resolution order: explicit config -> persisted
+        layout (store_layout.json, written at the first run so later
+        updates keep the layout) -> auto from the extracted corpus size."""
         if self._n_shards is None:
             from fastdup_spark.config import resolve_store_shards
             if self.config.store_shards:
                 self._n_shards = int(self.config.store_shards)
             else:
                 layout = self.store.read_json("store_layout")
-                params = self.store.shard_params("knn")
                 if layout and layout.get("n_shards"):
                     self._n_shards = int(layout["n_shards"])
-                elif params:
-                    self._n_shards = params[1]
                 else:
                     counts = self.store.read_json("extract_counts") or {}
                     self._n_shards = resolve_store_shards(

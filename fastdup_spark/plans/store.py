@@ -34,12 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# Internal hash-bucket partition column for sharded stage tables (the
-# parquet-native approximation of Iceberg `bucket(N, doc_id)` partitioning):
-# tables written with `write_sharded` lay out rows in `_shard=K/` dirs keyed
-# by pmod(id, n_shards), so an incremental update's scans of a doc-keyed
-# table can prune to the shards holding the batch's ids. `read` strips the
-# column — it is store-internal.
+# Internal hash-bucket partition column for the base tables `extracted` and
+# `signatures` (the parquet-native approximation of Iceberg
+# `bucket(N, doc_id)` partitioning): they lay out rows in `_shard=K/` dirs
+# keyed by pmod(doc_id, n_shards), so an incremental update's membership,
+# score and LCS scans prune to the shards holding the batch's ids. The
+# derived tables are flat. `read` strips the column — it is store-internal.
 SHARD_COL = "_shard"
 
 
@@ -311,20 +311,20 @@ class StageStore:
         return mx
 
     def write_sharded(self, df: DataFrame, stage: str, config_hash: str,
-                      n_shards: int, id_col: str = "doc_id",
-                      counters: dict | None = None,
+                      n_shards: int, counters: dict | None = None,
                       sort_within: list[str] | None = None) -> dict:
-        """Full stage write hash-bucketed into `_shard=pmod(id, n_shards)/`
-        partition dirs. The pre-write repartition on the shard column keeps
-        output to ~one file per shard instead of (tasks x shards) fragments.
-        Shard params land in the marker counters, where shard-pruned reads
-        find the layout (`shard_params`). ``sort_within``
-        orders rows inside each shard file, tightening parquet row-group
-        min/max stats so pushed range predicates on those columns skip
-        row groups (e.g. best_nn sorted by best_sim for the outlier cut)."""
+        """Full stage write hash-bucketed into `_shard=pmod(doc_id,
+        n_shards)/` partition dirs, for a table that update() scans pruned
+        to a batch's shards (`signatures`). The pre-write repartition on
+        the shard column keeps output to ~one file per shard instead of
+        (tasks x shards) fragments. Shard params land in the marker
+        counters, where shard-pruned reads find the layout
+        (`shard_params`). ``sort_within`` orders rows inside each shard
+        file, tightening parquet row-group min/max stats so pushed range
+        predicates on those columns skip row groups."""
         counters = dict(counters or {})
-        counters.update({"sharded_by": id_col, "n_shards": int(n_shards)})
-        out = df.withColumn(SHARD_COL, shard_expr(id_col, n_shards)) \
+        counters.update({"sharded_by": "doc_id", "n_shards": int(n_shards)})
+        out = df.withColumn(SHARD_COL, shard_expr("doc_id", n_shards)) \
                 .repartition(F.col(SHARD_COL))
         if sort_within:
             out = out.sortWithinPartitions(SHARD_COL, *sort_within)

@@ -725,8 +725,7 @@ def _finalize_bookkeeping(fd, mem_bloom=None,
     tables; their three independent groups (knn | best_nn→outliers |
     assignments→component_info) run from concurrent driver threads. The
     rebuild depends only on what is committed, so one call finalizes a
-    clean batch, a crash replay and the heal of a crashed finalize alike,
-    and always writes the store's current shard layout.
+    clean batch, a crash replay and the heal of a crashed finalize alike.
 
     The `extracted` marker refreshes LAST: if a crash interrupts the
     derived-table writes, the stale marker keeps tripping the

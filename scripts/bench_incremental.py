@@ -3,9 +3,9 @@
 
 Runs the pipeline on the first 90% of the bench corpus, then times
 `fd.update()` of the remaining 10% and of a 50-doc trickle batch —
-reporting update seconds, touched docs, and how many shards of each derived
-table were rewritten — and compares against a from-scratch run over the
-full corpus. Appends the block to BENCH/BASELINE.md. Usage:
+reporting update seconds and touched docs — and compares against a
+from-scratch run over the full corpus. Appends the block to
+BENCH/BASELINE.md. Usage:
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/bench_incremental.py
 """
@@ -21,14 +21,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import CPUS, N_DOCS, SF_NAME, pages_path  # noqa: E402
-
-
-def files_by_shard(store, stage):
-    out = {}
-    for x in store._parquet_lineage(store.table_path(stage)):
-        shard, _, fn = x["file"].partition(os.sep)
-        out.setdefault(shard, set()).add((fn, x["rows"]))
-    return out
 
 
 def main() -> None:
@@ -56,18 +48,9 @@ def main() -> None:
     fd.run(base, force=True)
     t_base = round(time.time() - t0, 2)
 
-    stages = ["knn", "best_nn", "assignments", "component_info", "outliers"]
-    before = {s: files_by_shard(fd.store, s) for s in stages}
     t0 = time.time()
     stats = fd.update(batch)
     t_update = round(time.time() - t0, 2)
-    after = {s: files_by_shard(fd.store, s) for s in stages}
-    total_shards = fd.n_shards  # config.store_shards may be None (auto-scale)
-    rewritten = {}
-    for s in stages:
-        keys = set(before[s]) | set(after[s])
-        rewritten[s] = sum(1 for k in keys
-                           if before[s].get(k) != after[s].get(k))
 
     # tiny trickle batch (50 modified replicas of existing singleton-ish
     # pages): the steady streaming state
@@ -76,16 +59,9 @@ def main() -> None:
         .withColumn("url", F.concat(F.col("url"), F.lit("?trickle=1")))
         .withColumn("warc_ts", F.col("warc_ts") + F.expr("interval 90 days"))
     )
-    before_t = {s: files_by_shard(fd.store, s) for s in stages}
     t0 = time.time()
     stats_t = fd.update(tiny)
     t_tiny = round(time.time() - t0, 2)
-    after_t = {s: files_by_shard(fd.store, s) for s in stages}
-    rewritten_t = {}
-    for s in stages:
-        keys = set(before_t[s]) | set(after_t[s])
-        rewritten_t[s] = sum(1 for k in keys
-                             if before_t[s].get(k) != after_t[s].get(k))
 
     # from-scratch comparison over the identical full corpus
     work2 = "/tmp/fd_bench_incr_full"
@@ -101,12 +77,8 @@ def main() -> None:
         f"(touched {stats['touched_docs']} docs, {stats['new_pairs']} new "
         f"pairs); from-scratch over 100% {t_full}s "
         f"-> update = {t_update / t_full:.2f}x of a full rerun",
-        f"10%-batch derived-table shards rewritten (of {total_shards}): "
-        + ", ".join(f"{s}={rewritten[s]}" for s in stages)
-        + " (the finalize rebuilds every derived table)",
         f"50-doc trickle batch: {t_tiny}s, touched {stats_t['touched_docs']}"
-        f" docs; shards rewritten (of {total_shards}): "
-        + ", ".join(f"{s}={rewritten_t[s]}" for s in stages),
+        " docs",
     ]
     for ln in lines:
         print(ln)

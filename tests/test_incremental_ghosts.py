@@ -155,8 +155,7 @@ def test_empty_derived_tables_keep_scoped_path(spark, tmp_path):
                         ("outliers", ("doc_id", "best_sim", "best_nn"))):
         assert _table_set(fd, spark, stage, cols) == \
             _table_set(fd_full, spark, stage, cols), stage
-    # outliers transitioned empty -> 1 row (floor(0.05*24)=1), replacing
-    # the flat zero-row fallback layout
+    # outliers transitioned empty -> 1 row (floor(0.05*24)=1)
     assert fd.store.read(spark, "outliers").count() == 1
 
 
@@ -235,8 +234,8 @@ def test_bulk_backfill_membership_fallback(spark, tmp_path, monkeypatch):
 
 def test_membership_scan_is_shard_pruned(spark, tmp_path):
     """Round-5 verdict #2 'done' criterion: the base tables (extracted /
-    signatures) share the derived tables' bucket(N, doc_id) layout, so the
-    per-batch membership read PRUNES AT THE FILE INDEX — the executed scan
+    signatures) are laid out by bucket(N, doc_id), so the per-batch
+    membership read PRUNES AT THE FILE INDEX — the executed scan
     must carry a _shard IN (...) PartitionFilter covering only the batch's
     shards, not a full id-column scan."""
     import re

@@ -1,10 +1,10 @@
-"""Sharded stage-table layout: the doc-keyed tables (extracted /
-signatures and the derived knn / best_nn / assignments / component_info /
-outliers) are hash-bucketed by pmod(id, store_shards) — the parquet-native
-equivalent of Iceberg `bucket(N, id)` partitioning — and the layout
-persists across runs and updates. A TINY batch on a many-shard store still
-yields tables equal to a from-scratch run (test_incremental covers the
-big-batch case)."""
+"""Stage-table layout: the base tables (extracted / signatures) are
+hash-bucketed by pmod(doc_id, store_shards) — the parquet-native equivalent
+of Iceberg `bucket(N, doc_id)` partitioning — and the layout persists
+across runs and updates; the derived tables (knn / best_nn / assignments /
+component_info / outliers) are flat. A TINY batch on a many-shard store
+still yields tables equal to a from-scratch run (test_incremental covers
+the big-batch case)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +14,8 @@ from fastdup_spark.config import resolve_store_shards
 from fastdup_spark.fixtures.pages import generate_pages, pages_to_spark
 from fastdup_spark.plans.store import SHARD_COL
 
-SHARDED_STAGES = ["knn", "best_nn", "assignments", "component_info", "outliers"]
+SHARDED_STAGES = ["extracted", "signatures"]
+DERIVED_STAGES = ["knn", "best_nn", "assignments", "component_info", "outliers"]
 
 
 @pytest.fixture(scope="module")
@@ -47,13 +48,19 @@ def tiny_batch_run(spark, tmp_path_factory):
 
 
 def test_tables_are_shard_partitioned(tiny_batch_run):
+    """Only the base tables carry the bucket layout; the derived tables
+    are flat, with no shard dirs and no shard params."""
     fd = tiny_batch_run[0]
     for s in SHARDED_STAGES:
-        params = fd.store.shard_params(s)
-        assert params is not None, f"{s} missing shard params"
-        assert params[1] == fd.n_shards
+        assert fd.store.shard_params(s) == ("doc_id", fd.n_shards), s
         lineage = fd.store._parquet_lineage(fd.store.table_path(s))
-        assert all(x["file"].startswith(f"{SHARD_COL}=") for x in lineage), s
+        assert lineage and all(f"{SHARD_COL}=" in x["file"]
+                               for x in lineage), s
+    for s in DERIVED_STAGES:
+        assert fd.store.shard_params(s) is None, s
+        lineage = fd.store._parquet_lineage(fd.store.table_path(s))
+        assert lineage and not any(f"{SHARD_COL}=" in x["file"]
+                                   for x in lineage), s
 
 
 def test_tiny_batch_result_equals_full_run(spark, tiny_batch_run, tmp_path):
@@ -112,7 +119,7 @@ def test_resolve_store_shards_defaults_to_session_parallelism(spark, fd):
     layout = fd.store.read_json("store_layout")
     assert layout["n_shards"] == fd.n_shards == \
         resolve_store_shards(fd.docs().count(), p)
-    assert fd.store.shard_params("knn") == ("doc_id", fd.n_shards)
+    assert fd.store.shard_params("signatures") == ("doc_id", fd.n_shards)
 
 
 def test_persisted_layout_survives_run_and_update(spark, tmp_path, caplog):
@@ -145,7 +152,7 @@ def test_persisted_layout_survives_run_and_update(spark, tmp_path, caplog):
     assert 0 < stats["touched_docs"] < fd2.docs().count()  # not the corpus
     assert "full-rebuild" not in caplog.text
     assert fd2.store.read_json("store_layout")["n_shards"] == 32
-    for s in ("extracted", "signatures", *SHARDED_STAGES):
+    for s in SHARDED_STAGES:
         assert fd2.store.shard_params(s)[1] == 32, s
 
 
@@ -157,6 +164,32 @@ def test_read_strips_shard_column(tiny_batch_run, spark):
         kept = fd.store.read(spark, s, keep_shard=True)
         assert SHARD_COL in kept.columns
         assert dict(kept.dtypes)[SHARD_COL] == "int"
+
+
+def test_derived_tail_job_count(spark, tiny_batch_run):
+    """The derived-table tail — the three derived_table_writers thunks,
+    run serially under one job group over update()'s finalize inputs —
+    stays within its job budget, and rewrites the same rows."""
+    from fastdup_spark.plans.pipeline import derived_table_writers
+    fd = tiny_batch_run[0]
+    store = fd.store
+    rows = {s: store.footer_rows(s) for s in DERIVED_STAGES}
+    writers = derived_table_writers(fd, fd.docs(),
+                                    store.read(spark, "pairs_scored"),
+                                    store.read(spark, "similarity"))
+    sc = spark.sparkContext
+    sc.setJobGroup("derived_tail", "derived-table rebuild")
+    try:
+        for w in writers:
+            w()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("derived_tail"))
+    assert {s: store.footer_rows(s) for s in DERIVED_STAGES} == rows
+    # 25 jobs when each of the five tables was written `_shard`-partitioned
+    # (one repartition exchange per table); 20 with flat writes
+    assert 0 < jobs <= 20, f"derived tail ran {jobs} jobs"
 
 
 def test_orc_store_format_end_to_end(spark, tmp_path):
